@@ -24,6 +24,7 @@ the (tiny) CC loop. Head-domain skew in mentions is handled by AQE
 
 from __future__ import annotations
 
+import logging
 import os
 
 import pandas as pd
@@ -37,6 +38,8 @@ from pyspark.sql.types import (
 )
 
 from lexmapr_spark.lexicon import Lexicon, default_lexicon
+
+_log = logging.getLogger(__name__)
 
 MENTION_SCHEMA = StructType([
     StructField("url", StringType()),
@@ -810,145 +813,19 @@ def _path_exists(spark, path: str) -> bool:
 def run_with_checkpoint(pages: DataFrame, lex_bc, out_dir: str,
                         n_buckets: int = 32, canonical: bool = False,
                         manifest_chunks: int = 1) -> dict:
-    """End-to-end run with per-partition lineage + resume.
-
-    Pages are split into ``n_buckets`` deterministic url-hash buckets.
-    A single job filters to the not-yet-done buckets (one scan, not one
-    per bucket), annotates with the bucket id carried through the Arrow
-    stage, and writes ``out_dir/triples/bucket=<b>`` via dynamic
-    partition overwrite (only the buckets present in this run's output
-    are replaced; completed buckets from a previous run are untouched).
-    A bucket whose run legitimately produces ZERO triples emits no
-    partition directory, so any stale partial files a crashed prior run
-    left there are explicitly deleted before its manifest row is
-    written. Per-bucket metrics (pages in, triples out) come from
-    ``observe()`` nodes — conditional counts evaluated inside the same
-    job, zero extra scans.
-
-    Durability granularity: manifest rows ``out_dir/manifest/bucket=<b>``
-    land only after their job completes, so a kill mid-job never marks
-    an unfinished bucket done — but with the default
-    ``manifest_chunks=1`` (one single-pass job over all todo buckets)
-    a mid-run kill also records no progress and the whole todo set
-    reruns idempotently on restart. Set ``manifest_chunks > 1`` to
-    trade extra input scans for intra-run durability: the todo buckets
-    are processed as that many sequential jobs, each manifested on
-    completion, so a crash loses only the in-flight chunk.
+    """End-to-end run with per-bucket lineage + resume: writes
+    ``out_dir/triples/bucket=<b>`` straight from :func:`annotate`, one
+    job with one input scan per chunk (optionally canonicalized).
+    Buckets, manifest and the resume contract: :func:`_bucketed_run`.
     """
-    spark = pages.sparkSession
-    manifest_dir = os.path.join(out_dir, "manifest")
-    triples_dir = os.path.join(out_dir, "triples")
-
-    done: set[int] = set()
-    if _path_exists(spark, manifest_dir):
-        done = {
-            r.bucket for r in
-            spark.read.parquet(manifest_dir).select("bucket").collect()
-        }
-
-    todo = [b for b in range(n_buckets) if b not in done]
-    stats = {"buckets_total": n_buckets, "buckets_skipped": len(done),
-             "pages": 0, "triples": 0}
-    if not todo:
-        return stats
-
-    # lexicon-derived mapping: one CC run covers every bucket and chunk
-    comps = (connected_components(alias_edges(spark, lex_bc.value))
-             if canonical else None)
-
-    n_chunks = max(1, min(int(manifest_chunks), len(todo)))
-    size = -(-len(todo) // n_chunks)
-    chunks = [todo[i:i + size] for i in range(0, len(todo), size)]
-
-    for chunk in chunks:
-        _checkpoint_job(spark, pages, lex_bc, chunk, n_buckets, comps,
-                        triples_dir, manifest_dir, stats)
-    return stats
-
-
-def _checkpoint_job(spark, pages, lex_bc, buckets, n_buckets, comps,
-                    triples_dir, manifest_dir, stats) -> None:
-    """One single-pass annotate→triples→write job over ``buckets``,
-    manifesting each bucket after its data (and any stale-partition
-    cleanup) has landed."""
-    import uuid
-
-    from pyspark.sql import Observation
-
-    bucketed = pages.withColumn(
-        "bucket", F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int"))
-    if len(buckets) < n_buckets:
-        bucketed = bucketed.where(F.col("bucket").isin(*buckets))
-
-    def per_bucket_counts():
-        return [F.count(F.when(F.col("bucket") == b, 1)).alias(f"b{b}")
-                for b in buckets]
-
-    tag = uuid.uuid4().hex[:8]
-    pages_obs = Observation(f"pages_per_bucket_{tag}")
-    bucketed_raw = bucketed  # observe-free plan for the fallback path
-    bucketed = bucketed.observe(pages_obs, *per_bucket_counts())
-
-    mentions = annotate(bucketed, lex_bc, extra_cols=("bucket",))
-    t = triples(mentions, extra_cols=("bucket",))
-    if comps is not None:
-        t = canonicalize(t, comps, keep_cols=("bucket",))
-    triples_obs = Observation(f"triples_per_bucket_{tag}")
-    t = t.observe(triples_obs, *per_bucket_counts())
-
-    t.write.mode("overwrite").option("partitionOverwriteMode", "dynamic") \
-        .partitionBy("bucket").parquet(triples_dir)
-
-    def counts(obs, fallback: DataFrame | None):
-        # when the whole output is empty, AQE's empty-relation
-        # propagation replans the query and the upstream observe
-        # node's metrics are dropped — .get then raises deep in py4j.
-        # Recompute the per-bucket counts with one tiny aggregation in
-        # that (pathological: a run producing zero triples anywhere)
-        # case rather than guessing zeros.
-        try:
-            return obs.get
-        except Exception:
-            if fallback is None:
-                return {f"b{b}": 0 for b in buckets}
-            got = {r.bucket: r.n for r in
-                   fallback.groupBy("bucket").agg(
-                       F.count("*").alias("n")).collect()}
-            return {f"b{b}": got.get(b, 0) for b in buckets}
-
-    page_counts = counts(pages_obs, bucketed_raw)
-    written = None
-    if _path_exists(spark, triples_dir):
-        try:
-            written = spark.read.parquet(triples_dir).where(
-                F.col("bucket").isin(*buckets))
-        except Exception:
-            pass  # dir exists but has no readable footers (all-empty write)
-    triple_counts = counts(triples_obs, written)
-    for b in buckets:
-        n_pages = int(page_counts[f"b{b}"])
-        n_triples = int(triple_counts[f"b{b}"])
-        if n_triples == 0:
-            # dynamic overwrite only replaces partitions present in the
-            # output: a zero-triple bucket writes nothing, so stale
-            # partials from a crashed (unmanifested) prior run would
-            # otherwise survive while the manifest marks it done
-            _delete_path(spark, os.path.join(triples_dir, f"bucket={b}"))
-        # manifest row = lineage + metrics for this split; the bucket id
-        # lives in the directory name (partition column on read)
-        spark.createDataFrame(
-            [(n_pages, n_triples)], "pages BIGINT, triples BIGINT",
-        ).write.mode("overwrite").parquet(
-            os.path.join(manifest_dir, f"bucket={b}"))
-        stats["pages"] += n_pages
-        stats["triples"] += n_triples
+    return _bucketed_run(pages, lex_bc, out_dir, "run_with_checkpoint",
+                         n_buckets, canonical, manifest_chunks)
 
 
 def run_full_artifacts(pages: DataFrame, lex_bc, out_dir: str,
                        n_buckets: int = 32, full: bool = True,
                        classify: bool = True, canonical: bool = False,
                        manifest_chunks: int = 1,
-                       ordered_wide: bool = True,
                        wide_files_per_bucket: int | None = None) -> dict:
     """Production run emitting EVERY user-facing artifact from ONE
     pass over the input, bucket-resumable like
@@ -963,98 +840,33 @@ def run_full_artifacts(pages: DataFrame, lex_bc, out_dir: str,
       input; optionally canonicalized.
     * ``out_dir/wide/bucket=<b>`` — the reference's wide TSV as text
       part files (cells formatted worker-side via :func:`wide_lines`),
-      plus ``out_dir/wide/_header.tsv``. With ``ordered_wide`` (the
-      default) a bucket's bytes are deterministic across runs and
-      resumes, so ``cat _header.tsv bucket=*/part-*`` is a stable
-      artifact; pass ``ordered_wide=False`` to skip the line shuffle
-      when downstream only needs set semantics.
+      plus ``out_dir/wide/_header.tsv``. A bucket's bytes are
+      deterministic across runs and resumes, so
+      ``cat _header.tsv bucket=*/part-*`` is a stable artifact.
 
-    ``wide_files_per_bucket`` bounds per-task volume in the ordered
-    wide sink: each bucket's rows split into that many deterministic
-    url-hash sub-slices, each sorted and written independently, so a
-    bucket is never forced through ONE task (at 100 TB with 32
-    buckets, one-task-per-bucket would mean a ~3 TB single-task
-    sort). Default: ``spark.sql.shuffle.partitions / n_buckets``
-    (min 1) — per-task volume then tracks the session's configured
-    parallelism instead of the bucket count. The resolved value is
-    persisted in every manifest row (``wide_fpb``) and REUSED on
-    resume, so a per-bucket resume under a different session config
-    still writes the original run's part-file split — 'identical
-    across full runs and per-bucket resumes' holds regardless of the
-    resuming session's conf. With the value 1 each
-    bucket is one part file in url order (the strongest ordering
-    guarantee); with k > 1 each part file is internally url-sorted
-    and bucket bytes remain deterministic, but the concatenation is
-    sub-slice order, not global url order.
+    ``wide_files_per_bucket`` bounds per-task volume in the wide sink:
+    each bucket's rows split into that many deterministic url-hash
+    sub-slices, each sorted and written independently, so a bucket is
+    never forced through ONE task (at 100 TB with 32 buckets,
+    one-task-per-bucket would mean a ~3 TB single-task sort). Default:
+    the value recorded by the run being resumed, else
+    ``spark.sql.shuffle.partitions / n_buckets`` (min 1) — per-task
+    volume then tracks the session's configured parallelism instead of
+    the bucket count. The resolved value is part of the run fingerprint,
+    so a resume under a different session config still writes the
+    original run's part-file split. With the value 1 each bucket is one
+    part file in url order (the strongest ordering guarantee); with
+    k > 1 each part file is internally url-sorted and bucket bytes
+    remain deterministic, but the concatenation is sub-slice order, not
+    global url order.
 
-    Manifest rows land only after all three artifacts for a bucket
-    are durable, so resume never trusts a half-written bucket; all
-    sinks use dynamic partition overwrite, so re-running a bucket is
-    idempotent. ``manifest_chunks`` trades extra passes for intra-run
-    durability exactly as in :func:`run_with_checkpoint`.
+    A bucket is manifested only after all three artifacts for it are
+    durable; the resume contract is :func:`_bucketed_run`'s.
     """
-    spark = pages.sparkSession
-    manifest_dir = os.path.join(out_dir, "manifest")
-    mentions_dir = os.path.join(out_dir, "mentions")
-    triples_dir = os.path.join(out_dir, "triples")
-    wide_dir = os.path.join(out_dir, "wide")
-
-    # header first: it is input-independent, and writing it before any
-    # chunk (and on every resume) means a crash between the last
-    # bucket's manifest and run end can never leave the documented
-    # `cat _header.tsv bucket=*/part-*` artifact permanently headerless
-    _write_text_file(spark, os.path.join(wide_dir, "_header.tsv"),
-                     "\t".join(wide_headers(full, classify)) + "\n")
-
-    done: set[int] = set()
-    if _path_exists(spark, manifest_dir):
-        done = {
-            r.bucket for r in
-            spark.read.parquet(manifest_dir).select("bucket").collect()
-        }
-    todo = [b for b in range(n_buckets) if b not in done]
-    stats = {"buckets_total": n_buckets, "buckets_skipped": len(done),
-             "pages": 0, "triples": 0}
-    if not todo:
-        return stats
-
-    if wide_files_per_bucket is None and done:
-        # a per-bucket RESUME must reuse the original run's sub-slice
-        # count: the (bucket, sub) split decides part-file boundaries
-        # and concatenation order, so deriving a fresh default from
-        # THIS session's conf would rewrite resumed buckets with a
-        # different byte layout than the completed ones
-        try:
-            # mergeSchema: a manifest mixing pre-round-5 buckets (no
-            # wide_fpb column) with later resumed buckets would
-            # otherwise take its schema from one arbitrary footer —
-            # and .first() from one arbitrary row. Aggregate over all
-            # non-null values instead (they are all equal when
-            # present; max is just a deterministic picker).
-            prev = (spark.read.option("mergeSchema", "true")
-                    .parquet(manifest_dir)
-                    .agg(F.max("wide_fpb")).first())
-            if prev is not None and prev[0] is not None:
-                wide_files_per_bucket = int(prev[0])
-        except Exception:
-            pass  # pre-round-5 manifest without the column
-    if wide_files_per_bucket is None:
-        wide_files_per_bucket = max(
-            1, _session_parallelism(spark) // max(n_buckets, 1))
-
-    comps = (connected_components(alias_edges(spark, lex_bc.value))
-             if canonical else None)
-    n_chunks = max(1, min(int(manifest_chunks), len(todo)))
-    size = -(-len(todo) // n_chunks)
-    chunks = [todo[i:i + size] for i in range(0, len(todo), size)]
-
-    for chunk in chunks:
-        _artifacts_job(spark, pages, lex_bc, chunk, n_buckets, comps,
-                       full, classify, mentions_dir, triples_dir,
-                       wide_dir, manifest_dir, stats,
-                       ordered_wide=ordered_wide,
-                       wide_files_per_bucket=wide_files_per_bucket)
-    return stats
+    return _bucketed_run(pages, lex_bc, out_dir, "run_full_artifacts",
+                         n_buckets, canonical, manifest_chunks,
+                         classify=classify, full=full,
+                         wide_fpb=wide_files_per_bucket)
 
 
 def _session_parallelism(spark) -> int:
@@ -1066,65 +878,177 @@ def _session_parallelism(spark) -> int:
         return spark.sparkContext.defaultParallelism
 
 
-def _artifacts_job(spark, pages, lex_bc, buckets, n_buckets, comps,
-                   full, classify, mentions_dir, triples_dir, wide_dir,
-                   manifest_dir, stats, ordered_wide=True,
-                   wide_files_per_bucket=1) -> None:
+# Version 1 manifests (rows without a fingerprint) are refused.
+MANIFEST_VERSION = 2
+# the manifest columns a resume must match
+_FINGERPRINT = ("manifest_version", "driver", "n_buckets", "classify",
+                "full", "canonical", "wide_fpb", "lexicon_sha256")
+_MANIFEST_ROW = ("pages BIGINT, triples BIGINT, manifest_version INT, "
+                 "driver STRING, n_buckets INT, classify BOOLEAN, "
+                 "full BOOLEAN, canonical BOOLEAN, wide_fpb INT, "
+                 "lexicon_sha256 STRING")
+_TRIPLE_SCHEMA = "subj STRING, pred STRING, obj STRING, bucket INT"
+
+
+def _bucketed_run(pages, lex_bc, out_dir, driver, n_buckets, canonical,
+                  manifest_chunks, classify=False, full=False,
+                  wide_fpb=None) -> dict:
+    """The bucketed, resumable run behind :func:`run_with_checkpoint`
+    and :func:`run_full_artifacts` (``driver`` names which).
+
+    Pages are split into ``n_buckets`` deterministic url-hash buckets
+    (``xxhash64(url) % n_buckets``). A job filters the input to the
+    not-yet-done buckets (one scan, not one per bucket), annotates with
+    the bucket id carried through the Arrow stage, and writes
+    ``out_dir/<artifact>/bucket=<b>`` via dynamic partition overwrite,
+    so completed buckets from a previous run are untouched and
+    re-running a bucket is idempotent. Per-bucket counts (pages in,
+    triples out) come from ``observe()`` nodes inside the same job.
+
+    Resume contract:
+
+    * Fingerprint. Every manifest row ``out_dir/manifest/bucket=<b>``
+      records the run fingerprint — manifest version, driver,
+      ``n_buckets``, ``classify``/``full``/``canonical``, the resolved
+      ``wide_fpb`` and the lexicon's :meth:`Lexicon.content_hash` —
+      next to its pages and triples. The done buckets and their
+      fingerprints come from one read of the manifest.
+    * Refusal. A resume whose fingerprint differs from the stored one
+      raises ``ValueError`` naming the fields, before anything is
+      written: a different bucket count, mode or lexicon would mix two
+      runs' outputs in one directory. A manifest without a fingerprint
+      (written by an older engine) is refused too; use a fresh
+      ``out_dir``.
+    * Chunk durability. A bucket's manifest row lands only after its
+      artifacts are durable, so a kill never marks an unfinished bucket
+      done. With ``manifest_chunks=1`` all todo buckets run as one job
+      and a mid-run kill records no progress (the todo set reruns on
+      restart); ``manifest_chunks > 1`` trades one input scan per chunk
+      for intra-run durability, so a crash loses only the chunk in
+      flight.
+    * Empty buckets. Dynamic overwrite only replaces partitions present
+      in the output, so a bucket with no rows for an artifact would keep
+      any stale partial files a crashed run left there; they are deleted
+      before its manifest row is written.
+    """
+    spark = pages.sparkSession
+    manifest_dir = os.path.join(out_dir, "manifest")
+    rows = (spark.read.schema(_MANIFEST_ROW + ", bucket INT")
+            .parquet(manifest_dir).collect()
+            if _path_exists(spark, manifest_dir) else [])
+    if any(r.manifest_version is None for r in rows):
+        raise ValueError(
+            f"{manifest_dir} has rows without a run fingerprint (written "
+            "by an older engine version); write into a fresh out_dir")
+    if driver == "run_full_artifacts" and wide_fpb is None:
+        wide_fpb = (rows[0].wide_fpb if rows else
+                    max(1, _session_parallelism(spark) // max(n_buckets, 1)))
+    fp = {"manifest_version": MANIFEST_VERSION, "driver": driver,
+          "n_buckets": n_buckets, "classify": bool(classify),
+          "full": bool(full), "canonical": bool(canonical),
+          "wide_fpb": wide_fpb,
+          "lexicon_sha256": lex_bc.value.content_hash()}
+    stored = {k: sorted({r[k] for r in rows} - {fp[k]}, key=repr)
+              for k in _FINGERPRINT}
+    diff = {k: v for k, v in stored.items() if v}
+    if diff:
+        raise ValueError(
+            f"refusing to resume into {out_dir}: its run fingerprint "
+            "differs in " + "; ".join(f"{k} (stored {v}, now {fp[k]!r})"
+                                      for k, v in diff.items())
+            + " — resume with the same n_buckets, modes and lexicon, or "
+            "write into a fresh out_dir")
+
+    if driver == "run_full_artifacts":
+        # the header is input-independent; writing it before any chunk
+        # (and on every resume) means a crash between the last bucket's
+        # manifest and run end can never leave the documented
+        # `cat _header.tsv bucket=*/part-*` artifact permanently headerless
+        _write_text_file(spark, os.path.join(out_dir, "wide", "_header.tsv"),
+                         "\t".join(wide_headers(full, classify)) + "\n")
+    done = {r.bucket for r in rows}
+    todo = [b for b in range(n_buckets) if b not in done]
+    stats = {"buckets_total": n_buckets, "buckets_skipped": len(done),
+             "pages": 0, "triples": 0}
+    if not todo:
+        return stats
+
+    # lexicon-derived mapping: one CC run covers every bucket and chunk
+    comps = (connected_components(alias_edges(spark, lex_bc.value))
+             if canonical else None)
+    n_chunks = max(1, min(int(manifest_chunks), len(todo)))
+    size = -(-len(todo) // n_chunks)
+    for i in range(0, len(todo), size):
+        _bucketed_job(pages, lex_bc, out_dir, fp, todo[i:i + size], comps,
+                      stats)
+    return stats
+
+
+def _write_buckets(df: DataFrame):
+    """Writer that replaces only the ``bucket=<b>`` partitions present
+    in ``df``."""
+    return (df.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic").partitionBy("bucket"))
+
+
+def _bucketed_job(pages, lex_bc, out_dir, fp, buckets, comps, stats) -> None:
+    """One single-pass job over ``buckets``: annotate, write the
+    driver's artifacts, then manifest each bucket."""
     import uuid
 
     from pyspark.sql import Observation
 
+    spark = pages.sparkSession
+    n_buckets, classify = fp["n_buckets"], fp["classify"]
+    artifacts = fp["driver"] == "run_full_artifacts"
+    dirs = {a: os.path.join(out_dir, a)
+            for a in ("manifest", "mentions", "triples", "wide")}
+    in_chunk = F.col("bucket").isin(*buckets)
+
+    def observed(df, what):
+        obs = Observation(f"{what}_per_bucket_{uuid.uuid4().hex[:8]}")
+        return df.observe(obs, *[
+            F.count(F.when(F.col("bucket") == b, 1)).alias(f"b{b}")
+            for b in buckets]), obs
+
     bucketed = pages.withColumn(
         "bucket", F.pmod(F.xxhash64("url"), F.lit(n_buckets)).cast("int"))
     if len(buckets) < n_buckets:
-        bucketed = bucketed.where(F.col("bucket").isin(*buckets))
+        bucketed = bucketed.where(in_chunk)
+    observed_pages, pages_obs = observed(bucketed, "pages")
 
-    def per_bucket_counts():
-        return [F.count(F.when(F.col("bucket") == b, 1)).alias(f"b{b}")
-                for b in buckets]
-
-    tag = uuid.uuid4().hex[:8]
-    pages_obs = Observation(f"art_pages_{tag}")
-    bucketed_raw = bucketed
-    bucketed = bucketed.observe(pages_obs, *per_bucket_counts())
-
-    # THE input pass: scan -> Arrow matching stage -> mentions parquet
-    mentions = annotate(bucketed, lex_bc, classify=classify,
+    # THE input pass: scan -> Arrow matching stage
+    mentions = annotate(observed_pages, lex_bc, classify=classify,
                         extra_cols=("bucket",))
-    mentions.write.mode("overwrite") \
-        .option("partitionOverwriteMode", "dynamic") \
-        .partitionBy("bucket").parquet(mentions_dir)
-
-    # derive the other artifacts from the STORED mentions — re-reads
-    # the small intermediate, never the input
-    stored = spark.read.parquet(mentions_dir).where(
-        F.col("bucket").isin(*buckets))
-    t = triples(stored, extra_cols=("bucket",))
+    if artifacts:
+        # land the mentions, then derive the other artifacts from the
+        # STORED mentions — re-reads the small intermediate, never the
+        # input
+        _write_buckets(mentions).parquet(dirs["mentions"])
+        mentions = spark.read.parquet(dirs["mentions"]).where(in_chunk)
+    t = triples(mentions, extra_cols=("bucket",))
     if comps is not None:
         t = canonicalize(t, comps, keep_cols=("bucket",))
-    triples_obs = Observation(f"art_triples_{tag}")
-    t = t.observe(triples_obs, *per_bucket_counts())
-    t.write.mode("overwrite").option("partitionOverwriteMode", "dynamic") \
-        .partitionBy("bucket").parquet(triples_dir)
+    t, triples_obs = observed(t, "triples")
+    _write_buckets(t).parquet(dirs["triples"])
 
-    wl = wide_lines(stored, full=full, bucket=classify,
-                    extra_cols=("bucket", "url"))
-    if ordered_wide:
+    if artifacts:
         # deterministic bytes per bucket WITHOUT one-task-per-bucket:
-        # each bucket splits into wide_files_per_bucket url-hash
-        # sub-slices, hash-repartitioned on (bucket, sub) and sorted
-        # within tasks. The task count is n_buckets * fpb — constant
-        # regardless of which buckets this (possibly resumed) job
-        # covers — so the (bucket, sub) -> task mapping, and therefore
-        # every part file's contents, is identical across full runs
-        # and per-bucket resumes. The text sink's required ordering is
-        # just the partition column, which the sort prefixes — no
-        # extra sort is inserted. "line" as the final tiebreaker makes
-        # the sort total even when a url appears twice (crawl
-        # duplicates) — required for the byte-identical re-run
-        # guarantee. With fpb == 1 this degenerates to one url-sorted
-        # part file per bucket.
-        fpb = max(1, int(wide_files_per_bucket))
+        # each bucket splits into wide_fpb url-hash sub-slices,
+        # hash-repartitioned on (bucket, sub) and sorted within tasks.
+        # The task count is n_buckets * fpb — constant regardless of
+        # which buckets this (possibly resumed) job covers — so the
+        # (bucket, sub) -> task mapping, and therefore every part file's
+        # contents, is identical across full runs and per-bucket
+        # resumes. The text sink's required ordering is just the
+        # partition column, which the sort prefixes — no extra sort is
+        # inserted. "line" as the final tiebreaker makes the sort total
+        # even when a url appears twice (crawl duplicates) — required
+        # for the byte-identical re-run guarantee. With fpb == 1 this
+        # degenerates to one url-sorted part file per bucket.
+        fpb = max(1, int(fp["wide_fpb"]))
+        wl = wide_lines(mentions, full=fp["full"], bucket=classify,
+                        extra_cols=("bucket", "url"))
         # salt the sub-slice hash: the bucket id is ALSO
         # xxhash64(url) % n_buckets, so an unsalted xxhash64(url) %
         # fpb is fully correlated with it (identical when fpb ==
@@ -1141,50 +1065,52 @@ def _artifacts_job(spark, pages, lex_bc, buckets, n_buckets, comps,
                 # internally url-sorted (and deterministic) no matter
                 # how slices collide
                 .sortWithinPartitions("bucket", "url", "line"))
-    wl.select("line", "bucket") \
-        .write.mode("overwrite") \
-        .option("partitionOverwriteMode", "dynamic") \
-        .partitionBy("bucket").text(wide_dir)
+        _write_buckets(wl.select("line", "bucket")).text(dirs["wide"])
 
-    def counts(obs, fallback):
-        try:
-            return obs.get
-        except Exception:
-            if fallback is None:
-                return {f"b{b}": 0 for b in buckets}
-            got = {r.bucket: r.n for r in
-                   fallback.groupBy("bucket").agg(
-                       F.count("*").alias("n")).collect()}
-            return {f"b{b}": got.get(b, 0) for b in buckets}
-
-    page_counts = counts(pages_obs, bucketed_raw)
-    written = None
-    if _path_exists(spark, triples_dir):
-        try:
-            written = spark.read.parquet(triples_dir).where(
-                F.col("bucket").isin(*buckets))
-        except Exception:
-            pass  # dir exists but has no readable footers
-    triple_counts = counts(triples_obs, written)
-
+    page_counts = _bucket_counts(pages_obs, "pages", buckets,
+                                 lambda: bucketed)
+    triple_counts = _bucket_counts(
+        triples_obs, "triples", buckets,
+        lambda: (spark.read.schema(_TRIPLE_SCHEMA).parquet(dirs["triples"])
+                 .where(in_chunk)
+                 if _path_exists(spark, dirs["triples"]) else None))
     for b in buckets:
         n_pages = int(page_counts[f"b{b}"])
         n_triples = int(triple_counts[f"b{b}"])
-        # empty buckets write no partition under dynamic overwrite:
-        # clear stale partials from a crashed prior run before
-        # manifesting (same invariant as run_with_checkpoint)
-        if n_pages == 0:
-            _delete_path(spark, os.path.join(mentions_dir, f"bucket={b}"))
-            _delete_path(spark, os.path.join(wide_dir, f"bucket={b}"))
-        if n_triples == 0:
-            _delete_path(spark, os.path.join(triples_dir, f"bucket={b}"))
-        # wide_fpb rides every manifest row so a resume in a session
-        # with different parallelism reproduces the original run's
-        # part-file split instead of silently re-deriving its own
+        stale = ((["mentions", "wide"] if artifacts and n_pages == 0 else [])
+                 + (["triples"] if n_triples == 0 else []))
+        for a in stale:
+            _delete_path(spark, os.path.join(dirs[a], f"bucket={b}"))
+        # the bucket id lives in the directory name (partition column
+        # on read)
         spark.createDataFrame(
-            [(n_pages, n_triples, int(wide_files_per_bucket))],
-            "pages BIGINT, triples BIGINT, wide_fpb INT",
+            [(n_pages, n_triples, *(fp[k] for k in _FINGERPRINT))],
+            _MANIFEST_ROW,
         ).write.mode("overwrite").parquet(
-            os.path.join(manifest_dir, f"bucket={b}"))
+            os.path.join(dirs["manifest"], f"bucket={b}"))
         stats["pages"] += n_pages
         stats["triples"] += n_triples
+
+
+def _bucket_counts(obs, what, buckets, recount) -> dict:
+    """``{"b<b>": n}`` from a per-bucket ``observe()`` node. When the
+    whole output is empty, AQE's empty-relation propagation replans
+    the query and drops the node's metrics; then the counts are
+    recomputed with one small aggregation over ``recount()`` (zeros
+    when it returns None: nothing was written) and a warning is
+    logged — never guessed silently."""
+    from py4j.protocol import Py4JJavaError
+
+    try:
+        got = obs.get
+    except Py4JJavaError:
+        got = None
+    if got:
+        return got
+    _log.warning("per-bucket %s observation has no metrics; recounting "
+                 "buckets %s", what, buckets)
+    df = recount()
+    n = ({r.bucket: r.n for r in
+          df.groupBy("bucket").agg(F.count("*").alias("n")).collect()}
+         if df is not None else {})
+    return {f"b{b}": n.get(b, 0) for b in buckets}

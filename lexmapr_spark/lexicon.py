@@ -20,8 +20,10 @@ a broadcast hash join on every matching tier).
 from __future__ import annotations
 
 import csv
+import hashlib
+import json
 import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, fields
 
 from lexmapr_spark.textops import punctuation_treatment, word_tokenize
 
@@ -105,6 +107,21 @@ class Lexicon:
     # answers "could ANY suffix addition ever match this chunk?",
     # replacing 15 sort+join canonical probes per chunk
     suffix_bases: frozenset = frozenset()
+
+    def content_hash(self) -> str:
+        """sha256 of every compiled map as sorted-key JSON. Equal content
+        hashes equal in any process; a pickle hash would not, because
+        frozensets pickle in ``PYTHONHASHSEED`` order. Computed once per
+        object (~0.2 s for the predefined lexicon) and cached on it, so
+        finish mutating a lexicon before hashing it."""
+        cached = self.__dict__.get("_content_hash")
+        if cached is None:
+            blob = json.dumps(
+                {f.name: getattr(self, f.name) for f in fields(self)},
+                sort_keys=True, default=sorted)
+            cached = hashlib.sha256(blob.encode()).hexdigest()
+            self._content_hash = cached
+        return cached
 
     def add_synonym(self, raw_synonym: str, standardized_label: str) -> None:
         self.synonyms[raw_synonym] = standardized_label

@@ -339,15 +339,20 @@ def test_canonicalize_rewrites_variant_ids(spark):
     assert out[0].obj == engine.OBO_PREFIX + "ID_A"
 
 
-def test_checkpoint_resume_skips_done_buckets(spark, lex_bc):
+DRIVERS = ("run_with_checkpoint", "run_full_artifacts")
+
+
+@pytest.mark.parametrize("driver", DRIVERS)
+def test_checkpoint_resume_skips_done_buckets(spark, lex_bc, driver):
+    run = getattr(engine, driver)
     out = tempfile.mkdtemp()
     try:
         pages = synth_pages(spark, 200, corpus=load_corpus(limit=100))
-        s1 = engine.run_with_checkpoint(pages, lex_bc, out, n_buckets=4)
+        s1 = run(pages, lex_bc, out, n_buckets=4)
         assert s1["buckets_skipped"] == 0 and s1["triples"] > 0
         total1 = spark.read.parquet(os.path.join(out, "triples")).count()
         # resume: everything already done -> no recompute, same data
-        s2 = engine.run_with_checkpoint(pages, lex_bc, out, n_buckets=4)
+        s2 = run(pages, lex_bc, out, n_buckets=4)
         assert s2["buckets_skipped"] == 4 and s2["pages"] == 0
         total2 = spark.read.parquet(os.path.join(out, "triples")).count()
         assert total1 == total2
@@ -358,21 +363,18 @@ def test_checkpoint_resume_skips_done_buckets(spark, lex_bc):
 
 
 def test_partial_checkpoint_resume(spark, lex_bc):
-    """Kill-mid-run simulation: pre-complete 2 buckets, resume fills
+    """Kill-mid-run simulation: 2 buckets complete, resume fills
     only the rest."""
     out = tempfile.mkdtemp()
     try:
         pages = synth_pages(spark, 200, corpus=load_corpus(limit=100))
-        bucketed = pages.withColumn(
-            "bucket", F.pmod(F.xxhash64("url"), F.lit(4)).cast("int"))
-        # manually run buckets 0-1 (simulates the state after a kill)
-        for b in (0, 1):
-            part = bucketed.where(F.col("bucket") == b)
-            t = engine.triples(engine.annotate(part, lex_bc))
-            t.write.parquet(os.path.join(out, "triples", f"bucket={b}"))
-            spark.createDataFrame(
-                [(part.count(), t.count())], "pages BIGINT, triples BIGINT"
-            ).write.parquet(os.path.join(out, "manifest", f"bucket={b}"))
+        # a full run minus buckets 2-3's manifest rows and triples is
+        # the state a kill after buckets 0-1 landed leaves
+        engine.run_with_checkpoint(pages, lex_bc, out, n_buckets=4)
+        for b in (2, 3):
+            for d in ("manifest", "triples"):
+                shutil.rmtree(os.path.join(out, d, f"bucket={b}"),
+                              ignore_errors=True)
         s = engine.run_with_checkpoint(pages, lex_bc, out, n_buckets=4)
         assert s["buckets_skipped"] == 2
         assert spark.read.parquet(
@@ -381,12 +383,24 @@ def test_partial_checkpoint_resume(spark, lex_bc):
         shutil.rmtree(out, ignore_errors=True)
 
 
-def test_checkpoint_zero_triple_bucket_clears_stale_partials(spark, lex_bc):
+@pytest.mark.parametrize("driver,recounted", [
+    # the all-empty triple output makes AQE drop the pages observation
+    # in the single-job driver; run_full_artifacts observes pages in
+    # its (non-empty) mentions write, so nothing is recounted there
+    ("run_with_checkpoint", ["pages"]),
+    ("run_full_artifacts", []),
+], ids=DRIVERS)
+def test_checkpoint_zero_triple_bucket_clears_stale_partials(
+        spark, lex_bc, caplog, driver, recounted):
     """A crashed prior run can leave partial files under
     triples/bucket=<b> with no manifest row. If the resume legitimately
     produces 0 triples for that bucket, dynamic partition overwrite
     writes nothing there — the stale files must be deleted explicitly
-    before the bucket is manifested as triples=0."""
+    before the bucket is manifested as triples=0. Counts recomputed
+    because an observation lost its metrics are logged."""
+    import logging
+
+    caplog.set_level(logging.WARNING, logger="lexmapr_spark.engine")
     out = tempfile.mkdtemp()
     try:
         # texts that match nothing in the lexicon -> every bucket
@@ -404,9 +418,11 @@ def test_checkpoint_zero_triple_bucket_clears_stale_partials(spark, lex_bc):
             [("u#t", "componentMatch", "stale")],
             "subj STRING, pred STRING, obj STRING"
         ).write.mode("overwrite").parquet(stale_dir)
-        s = engine.run_with_checkpoint(pages, lex_bc, out, n_buckets=4)
+        s = getattr(engine, driver)(pages, lex_bc, out, n_buckets=4)
         assert s["triples"] == 0 and s["pages"] == 40
         assert not os.path.exists(stale_dir)
+        assert [r.getMessage().split()[1] for r in caplog.records
+                if r.name == "lexmapr_spark.engine"] == recounted
         manifest = spark.read.parquet(os.path.join(out, "manifest"))
         assert manifest.where(F.col("bucket") == victim
                               ).first().triples == 0
@@ -414,27 +430,69 @@ def test_checkpoint_zero_triple_bucket_clears_stale_partials(spark, lex_bc):
         shutil.rmtree(out, ignore_errors=True)
 
 
-def test_checkpoint_chunked_matches_single_job(spark, lex_bc):
+@pytest.mark.parametrize("driver", DRIVERS)
+def test_checkpoint_chunked_matches_single_job(spark, lex_bc, driver):
     """manifest_chunks>1 (intra-run durability) must produce the same
     triples and manifest totals as the default single-pass job."""
+    run = getattr(engine, driver)
     out1, out2 = tempfile.mkdtemp(), tempfile.mkdtemp()
     try:
         pages = synth_pages(spark, 160, corpus=load_corpus(limit=80))
-        s1 = engine.run_with_checkpoint(pages, lex_bc, out1, n_buckets=4)
-        s2 = engine.run_with_checkpoint(pages, lex_bc, out2, n_buckets=4,
-                                        manifest_chunks=2)
+        s1 = run(pages, lex_bc, out1, n_buckets=4)
+        s2 = run(pages, lex_bc, out2, n_buckets=4, manifest_chunks=2)
         assert s1 == s2 and s2["triples"] > 0
         t1 = spark.read.parquet(os.path.join(out1, "triples"))
         t2 = spark.read.parquet(os.path.join(out2, "triples"))
         assert t1.exceptAll(t2).count() == 0
         assert t2.exceptAll(t1).count() == 0
         # chunked run still resumes cleanly
-        s3 = engine.run_with_checkpoint(pages, lex_bc, out2, n_buckets=4,
-                                        manifest_chunks=2)
+        s3 = run(pages, lex_bc, out2, n_buckets=4, manifest_chunks=2)
         assert s3["buckets_skipped"] == 4 and s3["pages"] == 0
     finally:
         shutil.rmtree(out1, ignore_errors=True)
         shutil.rmtree(out2, ignore_errors=True)
+
+
+@pytest.mark.parametrize("driver", DRIVERS)
+def test_resume_refuses_mismatched_run(spark, lex_bc, driver):
+    """A resume whose bucket count, canonical mode or lexicon differs
+    from the stored run's would mix two runs' outputs (a 4->8 bucket
+    resume stores every url whose bucket id changed twice): each is
+    refused before anything is written, naming the field."""
+    import dataclasses
+
+    run = getattr(engine, driver)
+    out = tempfile.mkdtemp()
+    try:
+        pages = synth_pages(spark, 40, corpus=load_corpus(limit=20))
+        run(pages, lex_bc, out, n_buckets=4)
+        shutil.rmtree(os.path.join(out, "manifest", "bucket=1"))
+        lex = lex_bc.value
+        extra_bc = spark.sparkContext.broadcast(dataclasses.replace(
+            lex, synonyms={**lex.synonyms, "zzz fowl": "chicken"}))
+        for field, bc, kwargs in (
+                ("n_buckets", lex_bc, {"n_buckets": 8}),
+                ("canonical", lex_bc, {"n_buckets": 4, "canonical": True}),
+                ("lexicon_sha256", extra_bc, {"n_buckets": 4})):
+            with pytest.raises(ValueError, match=f"differs in {field} "):
+                run(pages, bc, out, **kwargs)
+        assert spark.read.parquet(os.path.join(out, "manifest")).count() == 3
+        assert run(pages, lex_bc, out, n_buckets=4)["buckets_skipped"] == 3
+    finally:
+        shutil.rmtree(out, ignore_errors=True)
+
+
+def test_resume_refuses_manifest_without_fingerprint(spark, lex_bc):
+    """A manifest written before runs were fingerprinted is refused."""
+    out = tempfile.mkdtemp()
+    try:
+        spark.createDataFrame([(10, 5)], "pages BIGINT, triples BIGINT") \
+            .write.parquet(os.path.join(out, "manifest", "bucket=0"))
+        pages = synth_pages(spark, 40, corpus=load_corpus(limit=20))
+        with pytest.raises(ValueError, match="fresh out_dir"):
+            engine.run_with_checkpoint(pages, lex_bc, out, n_buckets=4)
+    finally:
+        shutil.rmtree(out, ignore_errors=True)
 
 
 def test_run_full_artifacts_end_to_end(spark, lex_bc):
@@ -500,7 +558,7 @@ def _wide_bucket_bytes(out, expect_parts=None):
 
 
 def test_run_full_artifacts_wide_bucket_byte_order(spark, lex_bc):
-    """ordered_wide with wide_files_per_bucket=1: each wide bucket is
+    """The wide sink with wide_files_per_bucket=1: each wide bucket is
     ONE part file sorted by url, and re-running reproduces identical
     bytes — the strongest per-bucket ordering guarantee."""
     pages = synth_pages(spark, 120, corpus=load_corpus(limit=60))
@@ -690,7 +748,8 @@ def test_render_bucket_without_classify_raises(spark, lex_bc):
         engine.render_wide_tsv(collected, full=True, bucket=True)
 
 
-def test_checkpoint_is_single_pass(spark, lex_bc):
+@pytest.mark.parametrize("driver", DRIVERS)
+def test_checkpoint_is_single_pass(spark, lex_bc, driver):
     """The checkpointed run must read every input row exactly ONCE per
     run (VERDICT r01: the old per-bucket loop scanned the input up to
     2x n_buckets times). An accumulator inside a pass-through
@@ -706,7 +765,7 @@ def test_checkpoint_is_single_pass(spark, lex_bc):
                 yield pdf
 
         counted = pages.mapInPandas(counting, pages.schema)
-        s = engine.run_with_checkpoint(counted, lex_bc, out, n_buckets=4)
+        s = getattr(engine, driver)(counted, lex_bc, out, n_buckets=4)
         assert s["pages"] == 200 and s["triples"] > 0
         assert rows_read.value == 200, (
             f"input scanned {rows_read.value / 200:.1f}x, expected 1x")

@@ -2,6 +2,8 @@
 
 import json
 import os
+import subprocess
+import sys
 
 from lexmapr_spark import lexicon_io
 from lexmapr_spark.lexicon import default_lexicon
@@ -20,6 +22,23 @@ def test_artifact_roundtrip_behavior_identical(tmp_path):
         a = process_sample("s", text, lex)
         b = process_sample("s", text, loaded)
         assert a == b, text
+    assert loaded.content_hash() == lex.content_hash()
+
+
+def test_content_hash_stable_across_hash_seeds():
+    """The lexicon hash in a run fingerprint must agree between the
+    process that wrote a run and the one resuming it, whatever their
+    PYTHONHASHSEED (set iteration order)."""
+    code = ("from lexmapr_spark.lexicon import default_lexicon; "
+            "print(default_lexicon().content_hash())")
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    hashes = {
+        subprocess.run(
+            [sys.executable, "-c", code], check=True, capture_output=True,
+            text=True, cwd=root,
+            env={**os.environ, "PYTHONHASHSEED": seed}).stdout.strip()
+        for seed in ("1", "2")}
+    assert hashes == {default_lexicon().content_hash()}
 
 
 def test_artifact_passes_golden_corpus(tmp_path):

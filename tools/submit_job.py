@@ -7,10 +7,11 @@ Usage:
 
 Runs the checkpointed, resumable pipeline (pages -> mentions -> triples
 with a per-bucket manifest). Re-submitting with the same out_dir after
-a kill resumes, skipping completed buckets. With ``--artifacts`` it
-runs ``engine.run_full_artifacts`` instead, emitting the mentions
-table, the triples, AND the wide TSV part files from one input pass.
-Prints one JSON line.
+a kill resumes, skipping completed buckets; the resume must use the
+same n_buckets, mode and lexicon, or the run is refused. With
+``--artifacts`` it runs ``engine.run_full_artifacts`` instead, emitting
+the mentions table, the triples, AND the wide TSV part files from one
+input pass. Prints one JSON line.
 
 The lexicon resource CSVs are data files (not importable from a
 --py-files zip), so when running from a zip the lexicon is compiled
