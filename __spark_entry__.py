@@ -164,7 +164,8 @@ def entry(spark: SparkSession) -> DataFrame:
     annotate with the broadcast ontology lexicon, emit deduplicated
     (subj, pred, obj) triples."""
     pages = _docs_as_pages(spark, SF0001)
-    mentions = engine.annotate(pages, _lex_bc(spark))
+    mentions = engine.annotate(pages, _lex_bc(spark),
+                               fields=engine.TRIPLE_FIELDS)
     return engine.triples(mentions)
 
 
@@ -178,7 +179,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # ---- KG pipeline (matcher not SQL-expressible: rows-only checks)
     def kg_triples(spark, sf):
         return engine.triples(
-            engine.annotate(_docs_as_pages(spark, sf), _lex_bc(spark)))
+            engine.annotate(_docs_as_pages(spark, sf), _lex_bc(spark),
+                            fields=engine.TRIPLE_FIELDS))
     q["kg_triples"] = kg_triples
 
     def kg_match_histogram(spark, sf):
@@ -196,7 +198,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def kg_canonical_triples(spark, sf):
         lex = _lex_bc(spark).value
         t = engine.triples(
-            engine.annotate(_docs_as_pages(spark, sf), _lex_bc(spark)))
+            engine.annotate(_docs_as_pages(spark, sf), _lex_bc(spark),
+                            fields=engine.TRIPLE_FIELDS))
         comps = engine.connected_components(engine.alias_edges(spark, lex))
         return engine.canonicalize(t, comps)
     q["kg_canonical_triples"] = kg_canonical_triples

@@ -7,13 +7,15 @@ and pushes filters into the scan):
     -> annotate (ONE Arrow-batched ``mapInPandas`` stage carrying the
        whole matching cascade against the broadcast lexicon — the
        moral equivalent of a chain of broadcast hash joins; zero
-       shuffles on this path)
+       shuffles on this path; triple-only callers ship just
+       ``TRIPLE_FIELDS`` back through Arrow)
     -> triple emission (``explode`` + project; map-side-combined
        ``dropDuplicates``)
     -> canonicalization (connected components over the synonym/alias
        graph, iterative large/small-star joins)
-    -> partitioned sink with a per-partition checkpoint manifest so a
-       killed run resumes without recomputing completed splits.
+    -> bucket-partitioned sink with a per-bucket checkpoint manifest
+       (one manifest write per chunk of buckets) so a killed run
+       resumes without recomputing completed buckets.
 
 Scale notes: the lexicon broadcast is a few MB; annotation is
 embarrassingly parallel; the only shuffles are the triple dedup and
@@ -156,12 +158,42 @@ def broadcast_lexicon(spark: SparkSession, lex: Lexicon | None = None):
     return spark.sparkContext.broadcast(lex or default_lexicon())
 
 
+# annotate's output fields after ``url``, each with its MatchResult
+# extractor; every value is a pure function of the page text
+_EXTRACT = {
+    "sample_desc": lambda r: r.sample_desc,
+    "processed_sample": lambda r: r.processed_sample,
+    "processed_sample_sci_name": lambda r: r.processed_sample_sci_name,
+    "matched_components": lambda r: r.matched_components,
+    "matched_pairs": lambda r: [{"label": lb, "term_id": ti}
+                                for lb, ti in r.matched_pairs],
+    "macro_status": lambda r: r.macro_status,
+    "micro_status": lambda r: r.micro_status,
+    "transformations": lambda r: [{"token": k, "lemma": v}
+                                  for k, v in r.transformations.items()],
+    "sample_tokens": lambda r: r.sample_tokens,
+    "covered_tokens": lambda r: r.covered_tokens,
+    "ifsac_labels": lambda r: r.third_party_classification,
+    # the full-bucket tiers are nested Python structures (int-keyed
+    # dicts); the reference renders them with str() (pipeline.py:286-289),
+    # so they are serialized to the display form worker-side, where the
+    # objects live — byte-exact through Arrow by construction
+    "lexmapr_classification": lambda r: str(r.lexmapr_classification),
+    "lexmapr_bucket": lambda r: str(r.lexmapr_bucket),
+    "third_party_bucket": lambda r: str(r.third_party_bucket),
+}
+
+# the mention columns triples_projection reads
+TRIPLE_FIELDS = ("url", "macro_status", "matched_pairs")
+
+
 def annotate(pages: DataFrame, lex_bc, url_col: str = "url",
              text_col: str = "text",
              min_partitions: int | None = 0,
              classify: bool = False,
              confidence: bool = False,
-             extra_cols: tuple = ()) -> DataFrame:
+             extra_cols: tuple = (),
+             fields: tuple | None = None) -> DataFrame:
     """pages -> wide mention table via one Arrow-batched stage.
 
     Narrow on the matching path: each Arrow batch of (url, text) rows
@@ -181,7 +213,25 @@ def annotate(pages: DataFrame, lex_bc, url_col: str = "url",
     Arrow stage (e.g. a partition/bucket id or document metadata) —
     they ride along in each batch and are appended to the output
     schema, so downstream stages keep them without a join back.
+
+    ``fields``: the mention columns to return, in that order (``None``:
+    every column — ``MENTION_SCHEMA``, then ``CONFIDENCE_FIELDS`` with
+    ``confidence``, then ``CLASSIFY_FIELDS`` with ``classify``). Only
+    the requested columns cross the Arrow boundary; triple-only callers
+    pass :data:`TRIPLE_FIELDS`. A name outside that full schema raises
+    ``ValueError``.
     """
+    full_schema = (MENTION_SCHEMA.fields
+                   + (CONFIDENCE_FIELDS if confidence else [])
+                   + (CLASSIFY_FIELDS if classify else []))
+    by_name = {f.name: f for f in full_schema}
+    if fields is None:
+        fields = tuple(by_name)
+    unknown = [f for f in fields if f not in by_name]
+    if unknown:
+        raise ValueError(
+            f"annotate: unknown fields {unknown} (with classify={classify}, "
+            f"confidence={confidence} the fields are {list(by_name)})")
     ship_package(pages.sparkSession)
     projected = pages.select(F.col(url_col).alias("url"),
                              F.col(text_col).alias("text"),
@@ -191,77 +241,42 @@ def annotate(pages: DataFrame, lex_bc, url_col: str = "url",
         target = min_partitions or pages.sparkSession.sparkContext.defaultParallelism
         if projected.rdd.getNumPartitions() < target:
             projected = projected.repartition(target)
+    names = [f for f in fields if f != "url"]
+    extractors = [_EXTRACT[f] for f in names]
 
     def run_batches(batches):
         from lexmapr_spark.matcher import process_sample
         lex = lex_bc.value
         # web corpora repeat page text heavily (boilerplate, mirrored
-        # pages, crawl duplicates); every Result field except the echoed
-        # sample_id is a pure function of the text, so matching runs
-        # ONCE per distinct text per partition. Bounded: cleared past
-        # 200k entries so a giant partition can't hoard worker memory.
+        # pages, crawl duplicates); every requested field except url is
+        # a pure function of the text, so matching runs ONCE per
+        # distinct text per partition and the memo keeps only the
+        # requested values. Bounded: cleared past 200k entries so a
+        # giant partition can't hoard worker memory.
         memo: dict = {}
         for pdf in batches:
             if len(memo) > 200_000:
                 memo.clear()
-            results = []
-            for u, t in zip(pdf["url"], pdf["text"]):
+            rows = []
+            for t in pdf["text"]:
                 # crawl tables contain null cells; a None must degrade
                 # to an empty row, never kill the job
-                u = u if u is not None else ""
                 t = t if t is not None else ""
-                r = memo.get(t)
-                if r is None:
-                    r = memo[t] = process_sample(u, t, lex,
-                                                 classify=classify)
-                results.append(r)
-            out = {
-                "url": list(pdf["url"]),
-                "sample_desc": [r.sample_desc for r in results],
-                "processed_sample": [r.processed_sample for r in results],
-                "processed_sample_sci_name":
-                    [r.processed_sample_sci_name for r in results],
-                "matched_components": [r.matched_components for r in results],
-                "matched_pairs": [
-                    [{"label": lb, "term_id": ti} for lb, ti in r.matched_pairs]
-                    for r in results],
-                "macro_status": [r.macro_status for r in results],
-                "micro_status": [r.micro_status for r in results],
-                "transformations": [
-                    [{"token": k, "lemma": v}
-                     for k, v in r.transformations.items()]
-                    for r in results],
-            }
-            if confidence:
-                # opt-in (C7 inputs): token arrays ride the Arrow
-                # batch only when the caller will score confidence —
-                # the default path pays nothing for them
-                out["sample_tokens"] = [r.sample_tokens for r in results]
-                out["covered_tokens"] = [r.covered_tokens for r in results]
-            if classify:
-                out["ifsac_labels"] = [
-                    r.third_party_classification for r in results]
-                # the full-bucket tiers are nested Python structures
-                # (int-keyed dicts); the reference renders them with
-                # str() (pipeline.py:286-289), so we serialize to the
-                # display form worker-side, where the objects live —
-                # byte-exact through Arrow by construction
-                out["lexmapr_classification"] = [
-                    str(r.lexmapr_classification) for r in results]
-                out["lexmapr_bucket"] = [
-                    str(r.lexmapr_bucket) for r in results]
-                out["third_party_bucket"] = [
-                    str(r.third_party_bucket) for r in results]
-            frame = pd.DataFrame(out)
+                vals = memo.get(t)
+                if vals is None:
+                    r = process_sample("", t, lex, classify=classify)
+                    vals = memo[t] = tuple(ex(r) for ex in extractors)
+                rows.append(vals)
+            cols = (dict(zip(names, map(list, zip(*rows)))) if rows
+                    else dict.fromkeys(names, []))
+            cols["url"] = pdf["url"].values
+            frame = pd.DataFrame({f: cols[f] for f in fields},
+                                 index=pdf.index)
             for c in extra_cols:
                 frame[c] = pdf[c].values
             yield frame
 
-    schema = StructType(
-        MENTION_SCHEMA.fields
-        + (CONFIDENCE_FIELDS if confidence else [])
-        + (CLASSIFY_FIELDS if classify else [])
-        + extra_fields)
+    schema = StructType([by_name[f] for f in fields] + extra_fields)
     return projected.mapInPandas(run_batches, schema)
 
 
@@ -273,11 +288,17 @@ def triples_projection(mentions: DataFrame,
     (``streaming.stream_triples``) emission paths so they can't drift.
     Uses the unmangled ``matched_pairs`` column — the display-form
     ``matched_components`` strings destroy IDs of labels containing
-    ':' (a preserved reference quirk).
+    ':' (a preserved reference quirk). Reads only
+    :data:`TRIPLE_FIELDS` (plus ``extra_cols``).
+
+    Mention rows with a NULL ``url`` emit nothing: their subject would
+    be the bare label (``concat_ws`` skips NULL), shared by every such
+    page.
     """
     return (
         mentions
-        .where(F.col("macro_status") != "No Match")
+        .where((F.col("macro_status") != "No Match")
+               & F.col("url").isNotNull())
         .select(
             F.col("url"),
             F.col("macro_status"),
@@ -886,7 +907,7 @@ _FINGERPRINT = ("manifest_version", "driver", "n_buckets", "classify",
 _MANIFEST_ROW = ("pages BIGINT, triples BIGINT, manifest_version INT, "
                  "driver STRING, n_buckets INT, classify BOOLEAN, "
                  "full BOOLEAN, canonical BOOLEAN, wide_fpb INT, "
-                 "lexicon_sha256 STRING")
+                 "lexicon_sha256 STRING, bucket INT")
 _TRIPLE_SCHEMA = "subj STRING, pred STRING, obj STRING, bucket INT"
 
 
@@ -919,13 +940,14 @@ def _bucketed_run(pages, lex_bc, out_dir, driver, n_buckets, canonical,
       runs' outputs in one directory. A manifest without a fingerprint
       (written by an older engine) is refused too; use a fresh
       ``out_dir``.
-    * Chunk durability. A bucket's manifest row lands only after its
-      artifacts are durable, so a kill never marks an unfinished bucket
-      done. With ``manifest_chunks=1`` all todo buckets run as one job
-      and a mid-run kill records no progress (the todo set reruns on
-      restart); ``manifest_chunks > 1`` trades one input scan per chunk
-      for intra-run durability, so a crash loses only the chunk in
-      flight.
+    * Chunk durability. A chunk's manifest rows land in one write
+      (one part file per ``manifest/bucket=<b>``) only after all of the
+      chunk's artifacts are durable, so a kill never marks an
+      unfinished bucket done. With ``manifest_chunks=1`` all todo
+      buckets run as one job and a mid-run kill records no progress
+      (the todo set reruns on restart); ``manifest_chunks > 1`` trades
+      one input scan per chunk for intra-run durability, so a crash
+      loses only the chunk in flight.
     * Empty buckets. Dynamic overwrite only replaces partitions present
       in the output, so a bucket with no rows for an artifact would keep
       any stale partial files a crashed run left there; they are deleted
@@ -933,7 +955,7 @@ def _bucketed_run(pages, lex_bc, out_dir, driver, n_buckets, canonical,
     """
     spark = pages.sparkSession
     manifest_dir = os.path.join(out_dir, "manifest")
-    rows = (spark.read.schema(_MANIFEST_ROW + ", bucket INT")
+    rows = (spark.read.schema(_MANIFEST_ROW)
             .parquet(manifest_dir).collect()
             if _path_exists(spark, manifest_dir) else [])
     if any(r.manifest_version is None for r in rows):
@@ -969,7 +991,7 @@ def _bucketed_run(pages, lex_bc, out_dir, driver, n_buckets, canonical,
     done = {r.bucket for r in rows}
     todo = [b for b in range(n_buckets) if b not in done]
     stats = {"buckets_total": n_buckets, "buckets_skipped": len(done),
-             "pages": 0, "triples": 0}
+             "pages": 0, "triples": 0, "recounted": 0}
     if not todo:
         return stats
 
@@ -993,7 +1015,7 @@ def _write_buckets(df: DataFrame):
 
 def _bucketed_job(pages, lex_bc, out_dir, fp, buckets, comps, stats) -> None:
     """One single-pass job over ``buckets``: annotate, write the
-    driver's artifacts, then manifest each bucket."""
+    driver's artifacts, then write the chunk's manifest rows."""
     import uuid
 
     from pyspark.sql import Observation
@@ -1017,9 +1039,11 @@ def _bucketed_job(pages, lex_bc, out_dir, fp, buckets, comps, stats) -> None:
         bucketed = bucketed.where(in_chunk)
     observed_pages, pages_obs = observed(bucketed, "pages")
 
-    # THE input pass: scan -> Arrow matching stage
+    # THE input pass: scan -> Arrow matching stage; only the triple
+    # columns cross it unless the full mentions are landed
     mentions = annotate(observed_pages, lex_bc, classify=classify,
-                        extra_cols=("bucket",))
+                        extra_cols=("bucket",),
+                        fields=None if artifacts else TRIPLE_FIELDS)
     if artifacts:
         # land the mentions, then derive the other artifacts from the
         # STORED mentions — re-reads the small intermediate, never the
@@ -1068,12 +1092,13 @@ def _bucketed_job(pages, lex_bc, out_dir, fp, buckets, comps, stats) -> None:
         _write_buckets(wl.select("line", "bucket")).text(dirs["wide"])
 
     page_counts = _bucket_counts(pages_obs, "pages", buckets,
-                                 lambda: bucketed)
+                                 lambda: bucketed, stats)
     triple_counts = _bucket_counts(
         triples_obs, "triples", buckets,
         lambda: (spark.read.schema(_TRIPLE_SCHEMA).parquet(dirs["triples"])
                  .where(in_chunk)
-                 if _path_exists(spark, dirs["triples"]) else None))
+                 if _path_exists(spark, dirs["triples"]) else None), stats)
+    manifest = []
     for b in buckets:
         n_pages = int(page_counts[f"b{b}"])
         n_triples = int(triple_counts[f"b{b}"])
@@ -1081,24 +1106,23 @@ def _bucketed_job(pages, lex_bc, out_dir, fp, buckets, comps, stats) -> None:
                  + (["triples"] if n_triples == 0 else []))
         for a in stale:
             _delete_path(spark, os.path.join(dirs[a], f"bucket={b}"))
-        # the bucket id lives in the directory name (partition column
-        # on read)
-        spark.createDataFrame(
-            [(n_pages, n_triples, *(fp[k] for k in _FINGERPRINT))],
-            _MANIFEST_ROW,
-        ).write.mode("overwrite").parquet(
-            os.path.join(dirs["manifest"], f"bucket={b}"))
+        manifest.append((n_pages, n_triples, *(fp[k] for k in _FINGERPRINT), b))
         stats["pages"] += n_pages
         stats["triples"] += n_triples
+    # one write lands the whole chunk's rows, so the job count does not
+    # grow with the bucket count; one part file per manifest/bucket=<b>
+    _write_buckets(spark.createDataFrame(manifest, _MANIFEST_ROW)
+                   .repartition(1)).parquet(dirs["manifest"])
 
 
-def _bucket_counts(obs, what, buckets, recount) -> dict:
+def _bucket_counts(obs, what, buckets, recount, stats) -> dict:
     """``{"b<b>": n}`` from a per-bucket ``observe()`` node. When the
     whole output is empty, AQE's empty-relation propagation replans
     the query and drops the node's metrics; then the counts are
     recomputed with one small aggregation over ``recount()`` (zeros
-    when it returns None: nothing was written) and a warning is
-    logged — never guessed silently."""
+    when it returns None: nothing was written), a warning is logged
+    and ``stats["recounted"]`` goes up by one — never guessed
+    silently."""
     from py4j.protocol import Py4JJavaError
 
     try:
@@ -1109,6 +1133,7 @@ def _bucket_counts(obs, what, buckets, recount) -> dict:
         return got
     _log.warning("per-bucket %s observation has no metrics; recounting "
                  "buckets %s", what, buckets)
+    stats["recounted"] += 1
     df = recount()
     n = ({r.bucket: r.n for r in
           df.groupBy("bucket").agg(F.count("*").alias("n")).collect()}

@@ -168,7 +168,8 @@ def stream_triples(pages_stream, lex_bc, out_dir: str, checkpoint_dir: str,
     scale a global dedup belongs in a periodic batch compaction over
     the sink table, not in stream state.
     """
-    mentions = engine.annotate(pages_stream, lex_bc, min_partitions=None)
+    mentions = engine.annotate(pages_stream, lex_bc, min_partitions=None,
+                               fields=engine.TRIPLE_FIELDS)
     triples = engine.triples_projection(mentions)
 
     def write_batch(batch_df, _batch_id):

@@ -423,6 +423,7 @@ def test_checkpoint_zero_triple_bucket_clears_stale_partials(
         assert not os.path.exists(stale_dir)
         assert [r.getMessage().split()[1] for r in caplog.records
                 if r.name == "lexmapr_spark.engine"] == recounted
+        assert s["recounted"] == len(recounted)
         manifest = spark.read.parquet(os.path.join(out, "manifest"))
         assert manifest.where(F.col("bucket") == victim
                               ).first().triples == 0
@@ -451,6 +452,43 @@ def test_checkpoint_chunked_matches_single_job(spark, lex_bc, driver):
     finally:
         shutil.rmtree(out1, ignore_errors=True)
         shutil.rmtree(out2, ignore_errors=True)
+
+
+def test_checkpoint_job_count_independent_of_n_buckets(spark, lex_bc):
+    """A chunk's manifest rows land in one write, so the run's Spark
+    job count does not grow with n_buckets; each manifest/bucket=<b>
+    is one parquet file that pyarrow reads with every fingerprint
+    column."""
+    import pyarrow.parquet as pq
+
+    sc = spark.sparkContext
+    pages = synth_pages(spark, 40, corpus=load_corpus(limit=20))
+    jobs = {}
+    outs = {n: tempfile.mkdtemp() for n in (4, 16)}
+    try:
+        for n, out in outs.items():
+            group = f"job_count_{n}_{os.path.basename(out)}"
+            sc.setJobGroup(group, f"run_with_checkpoint n_buckets={n}")
+            try:
+                s = engine.run_with_checkpoint(pages, lex_bc, out, n_buckets=n)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            assert s["pages"] == 40 and s["triples"] > 0
+            jobs[n] = len(sc.statusTracker().getJobIdsForGroup(group))
+        assert jobs[4] == jobs[16], jobs
+        for n, out in outs.items():
+            for b in range(n):
+                bdir = os.path.join(out, "manifest", f"bucket={b}")
+                files = [f for f in os.listdir(bdir) if f.endswith(".parquet")]
+                assert len(files) == 1, (b, files)
+                table = pq.read_table(os.path.join(bdir, files[0]))
+                assert set(table.column_names) == (
+                    set(engine._FINGERPRINT) | {"pages", "triples"})
+                assert table.num_rows == 1
+                assert table["n_buckets"].to_pylist() == [n]
+    finally:
+        for out in outs.values():
+            shutil.rmtree(out, ignore_errors=True)
 
 
 @pytest.mark.parametrize("driver", DRIVERS)
@@ -882,3 +920,62 @@ def test_annotate_survives_null_cells(spark, lex_bc):
                != "No Match"]
     assert len(matched) == 1
     assert by_url["u4"].matched_components == matched[0].matched_components
+
+
+def test_triples_skip_null_url_pages(spark, lex_bc):
+    """A page with a NULL url emits no triples: concat_ws skips NULL,
+    so its subject would be the bare label, shared by every such page.
+    The narrow hand-off keeps the url NULL (not ''); pages with a url
+    are unaffected."""
+    pages = spark.createDataFrame(
+        [(None, "chicken breast"), (None, "frozen chicken breast"),
+         ("u4", "chicken breast")],
+        "url STRING, text STRING")
+    got = engine.triples(engine.annotate(pages, lex_bc)).collect()
+    assert got and all(r.subj.startswith("u4#") for r in got), got
+    narrow = engine.annotate(pages, lex_bc, fields=engine.TRIPLE_FIELDS)
+    assert sorted(r.url is None for r in narrow.collect()) == [
+        False, True, True]
+    assert sorted(engine.triples(narrow).collect()) == sorted(got)
+
+
+def test_narrow_hand_off_matches_full(spark, lex_bc):
+    """annotate(fields=TRIPLE_FIELDS) equals the full mention table
+    projected to those columns, over the golden inputs plus null cells
+    and repeated texts (the per-partition memo path), and
+    run_with_checkpoint, which ships only those columns, lands exactly
+    triples(annotate(pages)). A field subset keeps the caller's order
+    and rides with extra_cols; an unknown field name raises."""
+    rows = golden_pages(spark).collect()
+    rows += [(None, "chicken breast"), ("n2", None), (None, None)]
+    rows += [(f"rep{i}", t) for i in range(20)
+             for t in ("frozen chicken breast", "swab of pig carcass")]
+    pages = spark.createDataFrame(rows, "url STRING, text STRING")
+    cols = list(engine.TRIPLE_FIELDS)
+    full = engine.annotate(pages, lex_bc).select(*cols)
+    narrow = engine.annotate(pages, lex_bc, fields=engine.TRIPLE_FIELDS)
+    assert narrow.columns == cols
+    assert narrow.schema == full.schema
+    assert narrow.count() == len(rows)
+    assert narrow.exceptAll(full).count() == 0
+    assert full.exceptAll(narrow).count() == 0
+    picked = engine.annotate(
+        pages.withColumn("tag", F.lit(3)), lex_bc, classify=True,
+        fields=("ifsac_labels", "url"), extra_cols=("tag",))
+    assert picked.columns == ["ifsac_labels", "url", "tag"]
+    assert {r.tag for r in picked.collect()} == {3}
+    for bad in (("url", "bogus"), ("ifsac_labels",)):
+        # ifsac_labels exists only with classify=True
+        with pytest.raises(ValueError, match="unknown fields"):
+            engine.annotate(pages, lex_bc, fields=bad)
+    out = tempfile.mkdtemp()
+    try:
+        s = engine.run_with_checkpoint(pages, lex_bc, out, n_buckets=4)
+        back = spark.read.parquet(os.path.join(out, "triples")) \
+            .select("subj", "pred", "obj")
+        want = engine.triples(engine.annotate(pages, lex_bc))
+        assert back.count() == s["triples"] > 0
+        assert back.exceptAll(want).count() == 0
+        assert want.exceptAll(back).count() == 0
+    finally:
+        shutil.rmtree(out, ignore_errors=True)
