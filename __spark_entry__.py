@@ -196,12 +196,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["kg_classification_histogram"] = kg_classification_histogram
 
     def kg_canonical_triples(spark, sf):
-        lex = _lex_bc(spark).value
         t = engine.triples(
             engine.annotate(_docs_as_pages(spark, sf), _lex_bc(spark),
                             fields=engine.TRIPLE_FIELDS))
-        comps = engine.connected_components(engine.alias_edges(spark, lex))
-        return engine.canonicalize(t, comps)
+        return engine.canonicalize(
+            t, engine.alias_components(spark, _lex_bc(spark).value))
     q["kg_canonical_triples"] = kg_canonical_triples
 
     # ---- per-row invariant: byte-identical extracted text per url
@@ -1148,7 +1147,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_near_dup_filter",
         "dedup_near_dup_components",   # r9: + lazy cc checkpoints
         "dedup_near_dup_clusters",
-        "kg_canonical_triples",        # r9: lazy cc checkpoints
+        "kg_canonical_triples",        # driver-side alias components
         "events_asof_attribution",     # r9: asof skew_buckets motion
         "events_asof_nearest",
     ]
@@ -2585,10 +2584,10 @@ def _kg_oracle_sqls() -> dict[str, str]:
     reference-truth parquet produced by ``tools/
     build_kg_oracle_fixture.py``: per-doc rows from the reference's
     own ``pipeline.run`` executed in-sandbox, confidence from the
-    reference's dormant scoring functions, and a pure-Python
-    union-find canonical map (independent of the distributed
-    pointer-doubling CC). Bound to sf0.01 like every other oracle.
-    Missing fixtures degrade to the old rows-only check."""
+    reference's dormant scoring functions, and the stored union-find
+    canonical map (the fixture script's; the engine labels the alias
+    graph on the driver, not with a Spark CC). Bound to sf0.01 like
+    every other oracle. Missing fixtures degrade to rows-only checks."""
     fix = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                        "tests", "golden", "kg_oracle")
     ref = f"read_parquet('{fix}/ref_rows.parquet')"

@@ -11,17 +11,17 @@ and pushes filters into the scan):
        ``TRIPLE_FIELDS`` back through Arrow)
     -> triple emission (``explode`` + project; map-side-combined
        ``dropDuplicates``)
-    -> canonicalization (connected components over the synonym/alias
-       graph, iterative large/small-star joins)
+    -> canonicalization (broadcast join onto the alias graph's
+       component minima, computed on the driver from the lexicon)
     -> bucket-partitioned sink with a per-bucket checkpoint manifest
        (one manifest write per chunk of buckets) so a killed run
        resumes without recomputing completed buckets.
 
 Scale notes: the lexicon broadcast is a few MB; annotation is
-embarrassingly parallel; the only shuffles are the triple dedup and
-the (tiny) CC loop. Head-domain skew in mentions is handled by AQE
-(enabled in ``build_spark``) plus the optional salted repartition in
-``triples`` — both exercised in tests.
+embarrassingly parallel; the only shuffle is the triple dedup.
+Head-domain skew in mentions is handled by AQE (enabled in
+``build_spark``) plus the optional salted repartition in ``triples``
+— both exercised in tests.
 """
 
 from __future__ import annotations
@@ -516,16 +516,15 @@ def write_triples(trip: DataFrame, path: str,
 
 
 # ---------------------------------------------------------------------------
-# Canonicalization: connected components over the synonym/alias graph
+# Canonicalization: the synonym/alias graph and its components
 # ---------------------------------------------------------------------------
 
-def alias_edges(spark: SparkSession, lex: Lexicon) -> DataFrame:
-    """Edge DataFrame (src, dst) of the variant graph.
+def _alias_pairs(lex: Lexicon) -> list:
+    """(src, dst) pairs of the variant graph.
 
     Edges connect ontology term ids whose standardized labels share a
     canonical token multiset (permutation variants) and term ids
-    reachable from the same synonym string (SynLex). This is the
-    GraphFrames-style input to ``connected_components``.
+    reachable from the same synonym string (SynLex).
     """
     edges = []
     # permutation variants: all ids sharing a canonical label key
@@ -538,13 +537,41 @@ def alias_edges(spark: SparkSession, lex: Lexicon) -> DataFrame:
         syn_rid = lex.standard_resource_labels.get(syn)
         if rid and syn_rid and rid != syn_rid:
             edges.append((min(rid, syn_rid), max(rid, syn_rid)))
-    if not edges:
-        return spark.createDataFrame([], "src STRING, dst STRING")
-    return spark.createDataFrame(edges, "src STRING, dst STRING").distinct()
+    return edges
+
+
+def alias_edges(spark: SparkSession, lex: Lexicon) -> DataFrame:
+    """Edge DataFrame (src, dst) of ``_alias_pairs``."""
+    return spark.createDataFrame(_alias_pairs(lex),
+                                 "src STRING, dst STRING").distinct()
+
+
+def _component_minima(pairs) -> dict:
+    """Union-find: node -> its component's minimum id, in Python ``str``
+    (code-point) order, which is Spark's STRING order for UTF-8."""
+    parent: dict = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)  # every root is its comp's min
+    return {n: find(n) for n in parent}
+
+
+def alias_components(spark: SparkSession, lex: Lexicon) -> DataFrame:
+    """(node, component) map for ``canonicalize``. The alias graph is
+    lexicon-sized, so the driver labels it and no Spark job runs."""
+    return spark.createDataFrame(
+        list(_component_minima(_alias_pairs(lex)).items()),
+        "node STRING, component STRING")
 
 
 def connected_components(edges: DataFrame, max_iter: int = 20,
-                         strict: bool = True,
                          checkpoint_dir: str | None = None) -> DataFrame:
     """Min-label propagation with pointer doubling to a fixpoint:
     (node, component).
@@ -563,9 +590,8 @@ def connected_components(edges: DataFrame, max_iter: int = 20,
     nodes, and each round is localCheckpoint'ed to truncate lineage.
 
     Label values are always existing node ids (mins over node ids), so
-    the doubling join always finds its target. ``strict`` (default)
-    raises instead of silently returning split components if the cap
-    is somehow hit.
+    the doubling join always finds its target. Hitting the ``max_iter``
+    cap raises instead of silently returning split components.
 
     Durability: by default each round truncates lineage with
     ``localCheckpoint`` — executor-local blocks, fast, but NOT
@@ -598,7 +624,6 @@ def connected_components(edges: DataFrame, max_iter: int = 20,
     survive further reruns, or use a fresh dir per call.
     """
     spark = edges.sparkSession
-    converged = False
     run_dir = checkpoint_dir
     if checkpoint_dir is not None:
         fs, hdir = _hadoop_fs(spark, checkpoint_dir)
@@ -767,13 +792,12 @@ def connected_components(edges: DataFrame, max_iter: int = 20,
         if checkpoint_dir is not None and rnd > 0:
             _delete_path(spark, f"{run_dir}/round={rnd - 1}")
         if changed == 0:
-            converged = True
             break
-    if strict and not converged:
+    else:
         raise RuntimeError(
             f"connected_components did not converge in {max_iter} "
             "iterations (component diameter exceeds the cap); raise "
-            "max_iter or pass strict=False to accept split components")
+            "max_iter")
     # map every original node back through its contraction rep; a rep
     # whose whole neighborhood collapsed into it (a pure clique) has
     # no contracted edges and thus no loop row — its component is
@@ -995,9 +1019,8 @@ def _bucketed_run(pages, lex_bc, out_dir, driver, n_buckets, canonical,
     if not todo:
         return stats
 
-    # lexicon-derived mapping: one CC run covers every bucket and chunk
-    comps = (connected_components(alias_edges(spark, lex_bc.value))
-             if canonical else None)
+    # lexicon-derived mapping: one driver-side map covers every chunk
+    comps = alias_components(spark, lex_bc.value) if canonical else None
     n_chunks = max(1, min(int(manifest_chunks), len(todo)))
     size = -(-len(todo) // n_chunks)
     for i in range(0, len(todo), size):

@@ -68,28 +68,6 @@ def srp_hyperplanes(dim: int, n_planes: int = 16, seed: int = 42) -> list:
     return rng.standard_normal((n_planes, dim)).tolist()
 
 
-def srp_signature(vec_col: Column, planes: list) -> Column:
-    """Bit-string SRP signature: sign of each hyperplane projection.
-
-    Vectorized Arrow UDF: one numpy matmul per batch. Fastest for
-    large plane counts, but BLAS association order makes near-zero
-    projection signs engine-specific — use :func:`srp_signature_exact`
-    when cross-engine reproducibility matters more than raw speed.
-    """
-    from pyspark.sql.functions import pandas_udf
-
-    planes_arr = np.asarray(planes)
-
-    @pandas_udf("string")
-    def sig(vecs: pd.Series) -> pd.Series:
-        mat = np.vstack(vecs.to_numpy())            # (batch, dim)
-        bits = (mat @ planes_arr.T) >= 0            # (batch, n_planes)
-        return pd.Series(["".join("1" if b else "0" for b in row)
-                          for row in bits])
-
-    return sig(vec_col)
-
-
 def srp_signature_exact(vec_col: Column, planes: list) -> Column:
     """Bit-string SRP signature via a JVM sequential left fold.
 

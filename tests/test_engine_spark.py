@@ -256,6 +256,7 @@ def test_connected_components_matches_union_find_randomized(spark):
                      spark.createDataFrame(
                          edges, "src STRING, dst STRING")).collect()}
         assert comps == expected, f"trial {trial}"
+        assert engine._component_minima(edges) == expected, f"trial {trial}"
 
 
 def test_connected_components_durable_checkpoint_dir(spark, tmp_path):
@@ -325,13 +326,17 @@ def test_connected_components_durable_checkpoint_dir(spark, tmp_path):
     assert os.path.isdir(os.path.join(ckpt, "run=2"))
 
 
-def test_canonicalize_rewrites_variant_ids(spark):
+@pytest.mark.parametrize("components", [
+    lambda spark, lex: engine.connected_components(
+        engine.alias_edges(spark, lex)),
+    engine.alias_components,
+], ids=["connected_components", "alias_components"])
+def test_canonicalize_rewrites_variant_ids(spark, components):
     lex = Lexicon()
     lex.non_standard_resource_ids = {"id_b": "foo bar", "id_a": "bar foo"}
     lex.standard_resource_labels = {"foo bar": "id_b", "bar foo": "id_a"}
     lex.canon_labels = {"bar foo": {"foo bar": "id_b", "bar foo": "id_a"}}
-    edges = engine.alias_edges(spark, lex)
-    comps = engine.connected_components(edges)
+    comps = components(spark, lex)
     trip = spark.createDataFrame(
         [("u#x", "componentMatch", engine.OBO_PREFIX + "ID_B")],
         "subj STRING, pred STRING, obj STRING")
@@ -486,6 +491,41 @@ def test_checkpoint_job_count_independent_of_n_buckets(spark, lex_bc):
                     set(engine._FINGERPRINT) | {"pages", "triples"})
                 assert table.num_rows == 1
                 assert table["n_buckets"].to_pylist() == [n]
+    finally:
+        for out in outs.values():
+            shutil.rmtree(out, ignore_errors=True)
+
+
+def test_canonical_run_adds_no_cc_jobs(spark, lex_bc):
+    """canonical=True labels the lexicon's alias graph on the driver:
+    it adds at most the canonicalize join's own jobs to a run, not the
+    ~10 jobs of a Spark connected-components loop, and lands the same
+    triples as the CC-labelled pipeline."""
+    sc = spark.sparkContext
+    pages = synth_pages(spark, 120, corpus=load_corpus(limit=60))
+    jobs, trips = {}, {}
+    outs = {c: tempfile.mkdtemp() for c in (False, True)}
+    try:
+        for canonical, out in outs.items():
+            group = f"canonical_{canonical}_{os.path.basename(out)}"
+            sc.setJobGroup(group, f"run_with_checkpoint canonical={canonical}")
+            try:
+                s = engine.run_with_checkpoint(pages, lex_bc, out, n_buckets=4,
+                                               canonical=canonical)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            assert s["triples"] > 0
+            jobs[canonical] = len(sc.statusTracker().getJobIdsForGroup(group))
+            trips[canonical] = {tuple(r) for r in spark.read.parquet(
+                os.path.join(out, "triples")).select("subj", "pred", "obj")
+                .collect()}
+        assert jobs[True] - jobs[False] <= 2, jobs
+        comps = {r.node: r.component for r in engine.connected_components(
+            engine.alias_edges(spark, lex_bc.value)).collect()}
+        canon = {engine.OBO_PREFIX + n.upper(): engine.OBO_PREFIX + c.upper()
+                 for n, c in comps.items()}
+        assert trips[True] == {(s, p, canon.get(o, o))
+                               for s, p, o in trips[False]}
     finally:
         for out in outs.values():
             shutil.rmtree(out, ignore_errors=True)

@@ -2,6 +2,8 @@
 keys are consistent, and a fast subset cross-checks against DuckDB
 at sf0.001 (the full sweep lives in tools/check_contract.py)."""
 
+import os
+
 import duckdb
 import pytest
 
@@ -9,6 +11,8 @@ import __spark_entry__ as entrymod
 from lexmapr_spark import engine
 
 SF = "/root/testdata/sf0.001"
+# the kg_* fixture oracles are built over the sf0.01 corpus
+SF_KG = os.path.join(os.path.dirname(SF), "sf0.01")
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
 
@@ -104,8 +108,6 @@ def test_kg_fixture_oracles_present_and_runnable():
     every kg oracle parses/executes in DuckDB standalone (absolute
     paths, no views needed), and the per-doc truth covers the whole
     sf0.01 corpus."""
-    import os
-
     fix = os.path.join(os.path.dirname(os.path.dirname(
         os.path.abspath(__file__))), "tests", "golden", "kg_oracle")
     for f in ("ref_rows.parquet", "confidence.parquet",
@@ -126,6 +128,25 @@ def test_kg_fixture_oracles_present_and_runnable():
                 f"read_parquet('{fix}/ref_rows.parquet')").fetchone()[0]
     assert n == 500
     con.close()
+
+
+def test_kg_canonical_triples_matches_fixture_oracle(spark):
+    """kg_canonical_triples at sf0.01 equals its fixture oracle, whose
+    canon_map.parquet comes from tools/build_kg_oracle_fixture.py's own
+    union-find, not from the engine's."""
+    from tools.check_contract import normalize
+
+    name = "kg_canonical_triples"
+    oracle = entrymod.oracle_sql()[name]
+    spark_pdf = entrymod.queries()[name](spark, SF_KG).toPandas()
+    con = duckdb.connect()
+    duck_pdf = con.sql(oracle).df()
+    con.close()
+    s_cols, s_hash, s_rows = normalize(spark_pdf)
+    d_cols, d_hash, d_rows = normalize(duck_pdf)
+    assert s_cols == d_cols
+    assert len(s_rows) == len(d_rows) > 0
+    assert s_hash == d_hash
 
 
 def test_p5_prescreen_matches_bare_try_cast(spark):

@@ -76,7 +76,7 @@ def test_connected_components_strict_raises_on_cap():
         chain = [(f"n{i}", f"n{i+1}") for i in range(6)]
         edges = spark.createDataFrame(chain, "src STRING, dst STRING")
         with pytest.raises(RuntimeError):
-            engine.connected_components(edges, max_iter=2, strict=True)
+            engine.connected_components(edges, max_iter=2)
         comps = engine.connected_components(edges, max_iter=10)
         assert len({r.component for r in comps.collect()}) == 1
     finally:

@@ -23,10 +23,11 @@ oracle for the kg_* queries cannot re-derive matches — but it CAN
   Python ``process_sample``, itself byte-pinned to the reference by
   the full-pipeline differential.
 * ``canon_map.parquet`` — alias-graph canonicalization mapping
-  computed by a PURE-PYTHON union-find over the same (src, dst) edge
-  list ``engine.alias_edges`` builds — an independent implementation
-  of the connected-components step that ``kg_canonical_triples`` runs
-  distributed (pointer doubling).
+  computed by this script's own union-find over the same (src, dst)
+  edge list ``engine.alias_edges`` builds. ``kg_canonical_triples``
+  labels that graph on the driver too (``engine.alias_components``),
+  not with a distributed connected-components run; this fixture stays
+  the stored oracle it is compared against.
 
 Re-run whenever the resource CSVs, the matcher, or the sf0.01 corpus
 change:  python tools/build_kg_oracle_fixture.py
@@ -158,9 +159,10 @@ def build_confidence(docs):
 
 
 def build_canon_map():
-    """Union-find (independent of Spark's pointer-doubling CC) over
-    the alias edge list, rendered as the (obj, canon_obj) IRI mapping
-    ``engine.canonicalize`` broadcast-joins."""
+    """Union-find (this script's own, separate from
+    ``engine.alias_components``) over the alias edge list, rendered as
+    the (obj, canon_obj) IRI mapping ``engine.canonicalize``
+    broadcast-joins."""
     from lexmapr_spark.engine import OBO_PREFIX
     from lexmapr_spark.lexicon import default_lexicon
 
