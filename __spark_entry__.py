@@ -25,6 +25,9 @@ SF0001 = "/root/testdata/sf0.001"
 import os
 import weakref
 
+# the data-bound oracles derive their SQL literals from the sf0.01 tables
+SF001 = os.path.join(os.path.dirname(SF0001), "sf0.01")
+
 # weak keys: a stopped context's entry disappears with the context, so
 # a new session at a recycled address can never see a dead broadcast
 _LEX_BC: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
@@ -357,7 +360,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 .where(F.col("seq") <= 3))
     q["window_user_event_seq"] = window_user_event_seq
 
-    # batch twin of the streaming applyInPandasWithState sessionizer:
     # gap-based session ids via lag + running sum (oracle-checkable)
     def sessionize_events_batch(spark, sf):
         from pyspark.sql.window import Window
@@ -1199,28 +1201,28 @@ def _ivf_oracle_sqls() -> dict[str, str]:
     6th rounded decimal). Bound to sf0.01 because the centroid
     literals are data-dependent — exactly the scale the driver runs
     oracles at; returns {} (rows-only fallback) if that parquet is
-    unavailable."""
+    missing, and raises on any other failure."""
+    import duckdb
     import numpy as np
 
-    qids = [0, 7, 19]
-    try:
-        import duckdb
-        path = "/root/testdata/sf0.01/embeddings.parquet"
-        con = duckdb.connect()
-        rows = con.sql(
-            f"SELECT embedding FROM read_parquet('{path}') "
-            "ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 2000"
-        ).fetchall()
-        qrows = con.sql(
-            f"SELECT vec_id, embedding FROM read_parquet('{path}') "
-            f"WHERE vec_id IN ({','.join(map(str, qids))}) "
-            "ORDER BY vec_id").fetchall()
-        con.close()
-        if not rows or not qrows or qrows[0][0] != 0:
-            return {}
-    except Exception:
-        return {}
     from lexmapr_spark.ops.similarity import lloyd_kmeans
+
+    qids = [0, 7, 19]
+    path = f"{SF001}/embeddings.parquet"
+    if not os.path.exists(path):
+        return {}
+    con = duckdb.connect()
+    rows = con.sql(
+        f"SELECT embedding FROM read_parquet('{path}') "
+        "ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 2000"
+    ).fetchall()
+    qrows = con.sql(
+        f"SELECT vec_id, embedding FROM read_parquet('{path}') "
+        f"WHERE vec_id IN ({','.join(map(str, qids))}) "
+        "ORDER BY vec_id").fetchall()
+    con.close()
+    if [r[0] for r in qrows] != qids:
+        raise ValueError(f"{path}: query ids {qids} missing")
 
     data = np.asarray([list(r[0]) for r in rows], dtype=np.float64)
     cents = lloyd_kmeans(data, k=16, iters=10, seed=42)
@@ -1262,23 +1264,22 @@ def _ivf_oracle_sqls() -> dict[str, str]:
             "FROM probed p, q WHERE p.vec_id <> 0 "
             "ORDER BY cosine DESC, p.vec_id ASC LIMIT 10",
     }
-    if len(qrows) == len(qids):
-        branches = [
-            f"(SELECT CAST({qid} AS BIGINT) AS query_id, a.vec_id, "
-            f"{cos6('a.embedding', 'q.embedding')} AS cosine "
-            "FROM assigned a, (SELECT embedding FROM embeddings "
-            f"WHERE vec_id = {qid}) q "
-            f"WHERE a.rn = 1 AND a.cid IN ({probe_ids_for(vec)}) "
-            f"AND a.vec_id <> {qid} "
-            "ORDER BY cosine DESC, a.vec_id ASC LIMIT 10)"
-            for qid, vec in qrows
-        ]
-        out["ann_ivf_batch_topk"] = (
-            assigned_cte + " " + " UNION ALL ".join(branches))
-        # the stored-index variant serves from parquet-persisted
-        # centroids + assignments; doubles round-trip parquet exactly,
-        # so its results are pinned by the SAME batch SQL
-        out["ann_ivf_stored_batch_topk"] = out["ann_ivf_batch_topk"]
+    branches = [
+        f"(SELECT CAST({qid} AS BIGINT) AS query_id, a.vec_id, "
+        f"{cos6('a.embedding', 'q.embedding')} AS cosine "
+        "FROM assigned a, (SELECT embedding FROM embeddings "
+        f"WHERE vec_id = {qid}) q "
+        f"WHERE a.rn = 1 AND a.cid IN ({probe_ids_for(vec)}) "
+        f"AND a.vec_id <> {qid} "
+        "ORDER BY cosine DESC, a.vec_id ASC LIMIT 10)"
+        for qid, vec in qrows
+    ]
+    out["ann_ivf_batch_topk"] = (
+        assigned_cte + " " + " UNION ALL ".join(branches))
+    # the stored-index variant serves from parquet-persisted
+    # centroids + assignments; doubles round-trip parquet exactly,
+    # so its results are pinned by the SAME batch SQL
+    out["ann_ivf_stored_batch_topk"] = out["ann_ivf_batch_topk"]
 
     # SemDeDup over the clone corpus — same codebook (trained on the
     # BASE table, so cent_rows above is reused verbatim), same
@@ -1328,35 +1329,33 @@ def _srp_oracle_sqls() -> dict[str, str]:
     cosine re-rank are both reproducible in DuckDB. Probe buckets for
     the ANN query are derived driver-side with the identical fold
     (``srp_probe_buckets``); planes depend only on the embedding dim.
-    Bound to sf0.01 (the driver's oracle scale) like the IVF oracle."""
+    Bound to sf0.01 (the driver's oracle scale) like the IVF oracle;
+    {} if that parquet is missing, and raises on any other failure."""
+    import duckdb
     import numpy as np
 
-    batch_qids = [0, 7, 19]
-    try:
-        import duckdb
-        path = "/root/testdata/sf0.01/embeddings.parquet"
-        con = duckdb.connect()
-        qrow = con.sql(
-            f"SELECT embedding FROM read_parquet('{path}') WHERE vec_id = 0"
-        ).fetchall()
-        batch_rows = con.sql(
-            f"SELECT vec_id, embedding FROM read_parquet('{path}') "
-            f"WHERE vec_id IN ({','.join(map(str, batch_qids))}) "
-            "ORDER BY vec_id").fetchall()
-        n_emb = con.sql(
-            f"SELECT count(*) FROM read_parquet('{path}')").fetchone()[0]
-        con.close()
-        if not qrow or len(batch_rows) != len(batch_qids):
-            return {}
-    except Exception:
-        return {}
     from lexmapr_spark.ops.similarity import (
         derive_srp_bits,
         srp_hyperplanes,
         srp_probe_buckets,
     )
 
-    qvec = np.asarray(list(qrow[0][0]), dtype=np.float64)
+    batch_qids = [0, 7, 19]
+    path = f"{SF001}/embeddings.parquet"
+    if not os.path.exists(path):
+        return {}
+    con = duckdb.connect()
+    batch_rows = con.sql(
+        f"SELECT vec_id, embedding FROM read_parquet('{path}') "
+        f"WHERE vec_id IN ({','.join(map(str, batch_qids))}) "
+        "ORDER BY vec_id").fetchall()
+    n_emb = con.sql(
+        f"SELECT count(*) FROM read_parquet('{path}')").fetchone()[0]
+    con.close()
+    if [r[0] for r in batch_rows] != batch_qids:
+        raise ValueError(f"{path}: query ids {batch_qids} missing")
+
+    qvec = np.asarray(list(batch_rows[0][1]), dtype=np.float64)
     planes = srp_hyperplanes(len(qvec), 12)
     # banded near-dup layout: same derivation as the engine's
     # embedding_near_duplicates auto path over the 2x clone corpus
@@ -2534,20 +2533,19 @@ def _bpe_oracle_sqls() -> dict[str, str]:
     two-phase prefix-sum pack layout over those counts. What this
     checks: the Arrow-batched distributed tokenize equals the
     sequential reference run, and the pack math is count-agnostic.
-    Bound to sf0.01 like the other data-derived oracles."""
-    try:
-        import duckdb
+    Bound to sf0.01 like the other data-derived oracles; {} if that
+    parquet is missing, and raises on any other failure."""
+    import duckdb
 
-        from lexmapr_spark.ops import bpe
+    from lexmapr_spark.ops import bpe
 
-        con = duckdb.connect()
-        rows = con.execute(
-            "SELECT doc_id, text FROM "
-            "read_parquet('/root/testdata/sf0.01/documents.parquet')"
-        ).fetchall()
-        con.close()
-    except Exception:
+    path = f"{SF001}/documents.parquet"
+    if not os.path.exists(path):
         return {}
+    con = duckdb.connect()
+    rows = con.execute(
+        f"SELECT doc_id, text FROM read_parquet('{path}')").fetchall()
+    con.close()
     ranks = bpe.merge_ranks()
     memo: dict = {}
     counts = ",".join(

@@ -26,11 +26,10 @@ def minhash_token_hash(tok: Column, j: int) -> Column:
     """The per-(token, hash-family) hash every MinHash path uses:
     fold 15 hex digits of ``md5("j:" + tok)`` into a 60-bit long.
 
-    Single source of truth — :func:`minhash_signatures`,
-    :func:`minhash_index`, and the streaming gate
-    (``streaming.stream_index_deduped_pages``) must produce
-    byte-identical signatures or stored indexes silently stop
-    matching; sharing the expression pins them together."""
+    Single source of truth — :func:`minhash_signatures` and
+    :func:`minhash_index` must produce byte-identical signatures or
+    stored indexes silently stop matching; sharing the expression pins
+    them together."""
     return F.conv(
         F.substring(F.md5(F.concat(F.lit(f"{j}:"), tok)), 1, 15),
         16, 10).cast("long")
@@ -40,8 +39,8 @@ def band_key_exprs(mh, n_hashes: int = N_MINHASHES,
                    rows_per_band: int = ROWS_PER_BAND) -> list:
     """LSH band-key columns ``"b:" + md5(mh(i) | mh(i+1) | ...)`` —
     ``mh`` is a callable ``j -> Column`` giving the j-th signature
-    component. Shared by the batch index ops and the streaming gate
-    (same silent-mismatch hazard as :func:`minhash_token_hash`)."""
+    component. Shared by the in-corpus band join and the stored-index
+    probe (same silent-mismatch hazard as :func:`minhash_token_hash`)."""
     n_bands = n_hashes // rows_per_band
     return [
         F.concat_ws(":", F.lit(str(b)), F.md5(F.concat_ws("|", *[

@@ -445,8 +445,11 @@ def derive_bucket_seconds(intervals: DataFrame,
     rule: the median interval span in whole seconds (floor 1 s; 3600 s
     when the interval side is empty), via one bounded two-column
     aggregate. Returns ``(bucket_seconds, stats)`` where ``stats``
-    carries ``n_intervals`` and ``estimated_fanout_rows`` (the explode
-    row count the chosen width implies, ``sum(span)/width + n``).
+    carries ``n_intervals``, ``estimated_fanout_rows`` (the explode
+    row count the chosen width implies, ``sum(span)/width + n``) and
+    ``span_max`` (the longest span in whole seconds;
+    :func:`range_count_sum` skips its whale tier when ``span_max`` is at
+    most ``whale_factor`` times the bucket width it plans with).
     Exposed so benches/operators that need to RECORD the derived width
     share this code instead of re-implementing it and drifting."""
     span = (F.unix_timestamp(F.col(end_col))

@@ -122,8 +122,8 @@ def bm25_topk(docs: DataFrame, query_terms: list[str], k: int = 10,
     broadcast 1-row crossJoin, per-document tf/dl are array
     expressions inside whole-stage codegen, and the k-row head is
     TakeOrderedAndProject. At 100 TB this is the right serving shape
-    for ad-hoc queries; for a standing query workload amortize the
-    corpus scan with :func:`bm25_batch_topk`.
+    for ad-hoc queries; for many queries at once amortize the corpus
+    scan with :func:`bm25_batch_topk`.
     """
     terms = _validate(query_terms, k, k1, b)
     toks = tokens_col(F.coalesce(F.col(text_col), F.lit("")))
@@ -361,76 +361,6 @@ def bm25_batch_topk_indexed(spark, path: str, queries: DataFrame,
                     F.round(F.col("c_total").cast("double"), 6)
                      .alias("score"))
             .orderBy(query_id_col, F.desc("score"), F.asc(id_col)))
-
-
-def bm25_index_stats(spark, path: str, query_terms: list[str],
-                     n_buckets: int = 64) -> dict:
-    """Corpus statistics for a standing query, frozen at index-build
-    time: ``{"n_docs", "total_toks", "df": {term: df}}`` from a
-    :func:`build_bm25_index` store. Reads the 1-row stats table plus
-    ONE partition-pruned count over the query terms' posting buckets —
-    two bounded driver actions (1 row + |terms| rows), never
-    corpus-sized. Terms absent from the corpus get df=0.
-    """
-    terms = _validate(query_terms, 1, 1.2, 0.75)
-    srow = spark.read.parquet(f"{path}/stats").first()
-    term_rows = spark.createDataFrame([(t,) for t in terms], "term string")
-    buckets = sorted({
-        r.b for r in term_rows.select(
-            F.pmod(F.xxhash64("term"), F.lit(n_buckets)).alias("b"))
-        .collect()})
-    df_rows = (spark.read.parquet(f"{path}/postings")
-               .where(F.col("term_bucket").isin(buckets))
-               .where(F.col("term").isin(list(terms)))
-               .groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-               .collect())
-    df = {t: 0 for t in terms}
-    df.update({r.term: r.df for r in df_rows})
-    return {"n_docs": srow.n_docs, "total_toks": srow.total_toks,
-            "df": df}
-
-
-def bm25_score_static(docs: DataFrame, query_terms: list[str],
-                      stats: dict, k1: float = 1.2, b: float = 0.75,
-                      id_col: str = "doc_id",
-                      text_col: str = "text") -> DataFrame:
-    """Score EVERY matching document against FIXED corpus statistics
-    (:func:`bm25_index_stats` output) — the standing-query routing /
-    alerting shape: idf is frozen at index-build time, so arriving
-    documents score identically no matter which micro-batch or
-    partition they land in, and the whole op is a pure projection
-    (stats are literals — not even a broadcast join). Returns
-    ``(id_col, score)`` unranked; gate or top-k downstream. Identical
-    rounding contract to :func:`bm25_topk` (6-dp DECIMAL contribution
-    sums), so with corpus-derived stats the scores match exactly.
-    """
-    terms = _validate(query_terms, 1, k1, b)
-    missing = [t for t in terms if t not in stats["df"]]
-    if missing:
-        raise ValueError(f"stats lack df for terms: {missing}")
-    toks = tokens_col(F.coalesce(F.col(text_col), F.lit("")))
-    scored = (docs
-              .select(F.col(id_col), F.size(toks).alias("dl"),
-                      *[F.size(F.filter(toks, _eq_term(t)))
-                        .alias(f"tf_{i}") for i, t in enumerate(terms)])
-              .where((F.col("tf_0") if len(terms) == 1 else
-                      F.greatest(*[F.col(f"tf_{i}")
-                                   for i in range(len(terms))])) > 0))
-    n_docs = F.lit(float(stats["n_docs"]))
-    avgdl = F.lit(float(stats["total_toks"])) / F.lit(float(stats["n_docs"]))
-    contribs = []
-    for i, t in enumerate(terms):
-        tf = F.col(f"tf_{i}").cast("double")
-        raw = (_idf(n_docs, F.lit(float(stats["df"][t])))
-               * _saturation(tf, F.col("dl").cast("double"), avgdl, k1, b))
-        contribs.append(
-            F.when(F.col(f"tf_{i}") > 0, F.round(raw, 6).cast(_DEC))
-             .otherwise(F.lit(0).cast(_DEC)))
-    total = contribs[0]
-    for c in contribs[1:]:
-        total = total + c
-    return scored.select(
-        id_col, F.round(total.cast("double"), 6).alias("score"))
 
 
 def bm25_batch_topk(docs: DataFrame, queries: DataFrame, k: int = 10,

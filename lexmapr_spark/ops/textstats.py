@@ -506,8 +506,8 @@ def repetition_stats(docs: DataFrame, id_col: str = "doc_id",
 def repetition_stats_col(text_col: str = "text",
                          line_sep: str = "\n"):
     """The :func:`repetition_stats` struct as a reusable column —
-    per-row and stateless, so it drops into batch projections and
-    Structured Streaming gates alike (no shuffle either way)."""
+    per-row and stateless, so it drops into any projection (the
+    ``curate`` gate, :func:`repetition_stats`) with no shuffle."""
     empty_frac = 0.0
 
     @F.pandas_udf("struct<dup_line_frac:double, dup_line_char_frac:double,"

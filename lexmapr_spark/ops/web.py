@@ -43,8 +43,7 @@ def host_suffixes_col(host: Column) -> Column:
 
 def blocked_host_cond(host: Column, domains) -> Column:
     """True iff ``host`` equals a blocked domain or is a subdomain of
-    one — the shared predicate behind the batch filter and the
-    streaming gate (one definition, so suffix semantics can't drift).
+    one — the predicate behind :func:`filter_blocked_hosts`.
 
     Null-safety invariant: for a null/invalid URL ``host_col`` yields
     null, but ``host_suffixes_col`` still evaluates to a NON-null

@@ -48,9 +48,23 @@ def test_entry_smoke(spark):
 def test_oracle_keys_subset_of_queries():
     q = set(entrymod.queries())
     o = set(entrymod.oracle_sql())
-    assert o <= q, o - q
-    # the majority of operators should be oracle-checked
-    assert len(o) >= 15
+    # every contract query is oracle-checked: none falls back to a
+    # rows-only check
+    assert o == q, (sorted(o - q), sorted(q - o))
+
+
+@pytest.mark.skipif(not os.path.isdir(SF_KG), reason="no sf0.01 tables")
+@pytest.mark.parametrize("builder", ["_ivf_oracle_sqls", "_srp_oracle_sqls",
+                                     "_bpe_oracle_sqls"])
+def test_data_bound_oracle_builders_raise_on_error(monkeypatch, builder):
+    """With the sf0.01 tables present, a DuckDB failure must surface,
+    not silently turn the builder's queries into rows-only checks."""
+    def broken_connect(*args, **kwargs):
+        raise RuntimeError("duckdb unavailable")
+
+    monkeypatch.setattr(duckdb, "connect", broken_connect)
+    with pytest.raises(RuntimeError, match="duckdb unavailable"):
+        getattr(entrymod, builder)()
 
 
 def test_oracled_queries_are_scalar_only(spark):

@@ -337,25 +337,6 @@ def test_lang_id(docs):
     assert langs[6] == "und"
 
 
-def test_salted_collect_set_equals_direct(spark):
-    """Two-phase salted aggregation must equal the direct one on
-    Zipf-skewed keys (one key owning most rows)."""
-    from lexmapr_spark.ops import skew
-
-    rows = [(("hot" if i % 10 else "cold"), f"v{i % 97}")
-            for i in range(2000)]
-    df = spark.createDataFrame(rows, "k STRING, v STRING")
-    salted = {r.k: list(r.values)
-              for r in skew.salted_collect_set(df, "k", "v").collect()}
-    direct = {r.k: sorted(r.vals) for r in
-              df.groupBy("k").agg(F.collect_set("v").alias("vals")).collect()}
-    assert salted == direct
-
-    counts = {r.k: r.n_distinct for r in
-              skew.salted_distinct_count(df, "k", "v").collect()}
-    assert counts == {k: len(v) for k, v in direct.items()}
-
-
 def test_multimodal_feature_plumbing(spark):
     media = multimodal.synth_media(spark, 30)
     feats = multimodal.extract_features(media).collect()
@@ -447,30 +428,6 @@ def test_frame_sample_plan(spark):
     assert rows and all(r.frame_ts_ms % 1000 == 0 for r in rows)
     videos = media.where(F.col("kind") == "video").count()
     assert plan.select("media_id").distinct().count() == videos
-
-
-def test_salted_distinct_count_plan_has_no_flatten(spark):
-    """Phase 2 must be sum(size(vals)) — disjoint-by-construction
-    partials — not a flatten+re-distinct that would concentrate a hot
-    key's full distinct set on one reducer."""
-    from lexmapr_spark.ops import skew
-
-    df = spark.createDataFrame([("k", "v")], "k STRING, v STRING")
-    plan = skew.salted_distinct_count(df, "k", "v")._jdf.queryExecution(
-    ).optimizedPlan().toString()
-    assert "flatten" not in plan.lower()
-
-
-def test_with_salt_star_form(spark):
-    """Default cols=('*',) salts over all columns and stays in range."""
-    from lexmapr_spark.ops import skew
-
-    df = spark.createDataFrame(
-        [(i, f"v{i}") for i in range(100)], "a LONG, b STRING")
-    out = skew.with_salt(df, 8).collect()
-    assert all(0 <= r._salt < 8 for r in out)
-    again = skew.with_salt(df, 8).collect()
-    assert sorted(map(str, out)) == sorted(map(str, again))  # deterministic
 
 
 def test_ivf_topk_precomputed_matches_self_contained(spark):

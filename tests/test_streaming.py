@@ -25,119 +25,6 @@ def lex_bc(spark):
     return engine.broadcast_lexicon(spark)
 
 
-def test_windowed_event_counts_with_watermark(spark):
-    """Closed windows emitted by the watermarked stream must equal the
-    batch groupBy for those windows; the final (never-closed) window
-    stays unemitted in append mode."""
-    base = tempfile.mkdtemp()
-    landing = os.path.join(base, "events")
-    out = os.path.join(base, "agg")
-    ckpt = os.path.join(base, "ckpt")
-    try:
-        src = "/root/testdata/sf0.001/events.parquet"
-        spark.read.parquet(src).write.parquet(landing)
-        q = streaming.windowed_event_counts(spark, landing, out, ckpt)
-        q.awaitTermination(120)
-        got = spark.read.parquet(out)
-        assert got.count() > 0
-        batch = (
-            spark.read.parquet(landing)
-            .groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
-            .agg(F.count("*").alias("n"))
-            .select(F.col("win.start").alias("window_start"),
-                    "event_type", F.col("n").alias("batch_n"))
-        )
-        joined = got.join(batch, ["window_start", "event_type"], "left")
-        bad = joined.where(F.col("n") != F.col("batch_n")).count()
-        assert bad == 0  # every emitted window agrees with batch truth
-        # append mode: the max window can't have closed
-        max_emitted = got.agg(F.max("window_end")).collect()[0][0]
-        max_ts = spark.read.parquet(landing).agg(F.max("ts")).collect()[0][0]
-        assert max_emitted <= max_ts
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-
-
-def test_late_data_dropped_by_watermark(spark):
-    """Events older than the watermark arriving in a later batch must
-    not reopen already-emitted windows (append-mode invariants)."""
-    base = tempfile.mkdtemp()
-    landing = os.path.join(base, "events")
-    out = os.path.join(base, "agg")
-    ckpt = os.path.join(base, "ckpt")
-    try:
-        src = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-        src.write.parquet(landing)
-        q = streaming.windowed_event_counts(spark, landing, out, ckpt)
-        q.awaitTermination(120)
-        before = spark.read.parquet(out)
-        n_before = before.count()
-        emitted = {(r.window_start, r.event_type): r.n
-                   for r in before.collect()}
-
-        # wave 2: events stamped BEFORE every emitted window — far
-        # behind the checkpointed watermark -> must be dropped
-        late = src.limit(50).withColumn(
-            "ts", F.expr("ts - INTERVAL 365 DAYS"))
-        late.write.mode("append").parquet(landing)
-        q2 = streaming.windowed_event_counts(spark, landing, out, ckpt)
-        q2.awaitTermination(120)
-        after = {(r.window_start, r.event_type): r.n
-                 for r in spark.read.parquet(out).collect()}
-        # no emitted window changed, and no year-old window appeared
-        for key, n in emitted.items():
-            assert after.get(key) == n
-        assert spark.read.parquet(out).count() == n_before
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-
-
-def test_sessionize_events_stateful_across_batches(spark):
-    """applyInPandasWithState: session ids must match a driver-side
-    truth computation, with state carried across micro-batches (input
-    split into two files, maxFilesPerTrigger=1)."""
-    import pandas as pd
-
-    base = tempfile.mkdtemp()
-    landing = os.path.join(base, "events")
-    out = os.path.join(base, "sessions")
-    ckpt = os.path.join(base, "ckpt")
-    gap = 1800
-    try:
-        events = spark.read.parquet(
-            "/root/testdata/sf0.001/events.parquet").orderBy("ts")
-        n = events.count()
-        pdf = events.toPandas()
-        # two time-ordered files -> two micro-batches -> cross-batch state
-        half = pdf.iloc[: n // 2]
-        rest = pdf.iloc[n // 2:]
-        spark.createDataFrame(half).coalesce(1).write.mode(
-            "append").parquet(landing)
-        spark.createDataFrame(rest).coalesce(1).write.mode(
-            "append").parquet(landing)
-
-        q = streaming.sessionize_events(spark, landing, out, ckpt,
-                                        gap_seconds=gap)
-        q.awaitTermination(120)
-        got = {(r.user_id, r.event_id): r.session_id
-               for r in spark.read.parquet(out).collect()}
-        assert len(got) == n
-
-        # driver-side truth
-        truth = {}
-        for uid, grp in pdf.sort_values("ts").groupby("user_id"):
-            sessions, last = 0, None
-            for _, row in grp.iterrows():
-                epoch = row["ts"].timestamp()
-                if last is None or epoch - last > gap:
-                    sessions += 1
-                last = epoch
-                truth[(uid, row["event_id"])] = sessions
-        assert got == truth
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-
-
 def test_stream_processes_files_incrementally(spark, lex_bc):
     base = tempfile.mkdtemp()
     landing = os.path.join(base, "landing")
@@ -176,351 +63,5 @@ def test_stream_processes_files_incrementally(spark, lex_bc):
             streaming.stream_pages(spark, landing), lex_bc, out, ckpt)
         q3.awaitTermination(120)
         assert spark.read.parquet(out).count() == n2
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-
-
-def test_stream_deduped_pages_bounded_state(spark):
-    """Duplicate (url, content) rows within the watermark are emitted
-    once; a changed text for the same url passes through (content hash
-    in the key)."""
-    import datetime
-
-    base = tempfile.mkdtemp()
-    landing = os.path.join(base, "pages")
-    out = os.path.join(base, "deduped")
-    ckpt = os.path.join(base, "ckpt")
-    try:
-        t0 = datetime.datetime(2026, 1, 1, 12, 0, 0)
-        rows = [
-            ("u1", t0, None, "same text", "en"),
-            ("u1", t0 + datetime.timedelta(minutes=5), None,
-             "same text", "en"),               # re-fetch -> suppressed
-            ("u1", t0 + datetime.timedelta(minutes=10), None,
-             "changed text", "en"),            # content change -> kept
-            ("u2", t0, None, "other page", "en"),
-        ]
-        spark.createDataFrame(rows, streaming.PAGES_SCHEMA) \
-            .write.parquet(landing)
-        q = streaming.stream_deduped_pages(
-            streaming.stream_pages(spark, landing), out, ckpt)
-        q.awaitTermination(120)
-        got = spark.read.parquet(out)
-        assert got.count() == 3
-        assert got.where(F.col("url") == "u1").count() == 2
-        # stateful op present with watermark (bounded state)
-        assert got.select("url", "text").distinct().count() == 3
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-
-
-def test_stream_curated_pages_filters_and_scrubs(spark):
-    """Streaming curation: low-quality and non-English rows are
-    dropped, kept rows have PII scrubbed, and the stream has no
-    stateful operator (stateless prefix only)."""
-    import datetime
-
-    base = tempfile.mkdtemp()
-    landing = os.path.join(base, "pages")
-    out = os.path.join(base, "curated")
-    ckpt = os.path.join(base, "ckpt")
-    try:
-        t0 = datetime.datetime(2026, 1, 1, 12, 0, 0)
-        good = ("the quick brown fox jumps over the lazy dog and then "
-                "it is resting in the shade of a big tree for an hour "
-                "contact me at someone@example.com about it")
-        rows = [
-            ("u1", t0, None, good, "en"),
-            ("u2", t0, None, "der schnelle braune fuchs und der faule "
-                             "hund ist nicht das problem", "de"),  # lang gate
-            ("u3", t0, None, "!!!! ???? ....", "en"),              # quality gate
-        ]
-        spark.createDataFrame(rows, streaming.PAGES_SCHEMA) \
-            .write.parquet(landing)
-        q = streaming.stream_curated_pages(
-            streaming.stream_pages(spark, landing), out, ckpt)
-        q.awaitTermination(120)
-        got = spark.read.parquet(out).collect()
-        assert [r.url for r in got] == ["u1"]
-        assert "<EMAIL>" in got[0].text
-        assert "someone@example.com" not in got[0].text
-        assert got[0].lang_pred == "en" and got[0].quality >= 0.3
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-
-
-def test_stream_curated_pages_blocklist_and_repetition_gates(spark):
-    """Optional stateless gates: URL blocklist (suffix semantics) and
-    the Gopher dup-word repetition rule, both on the stream with an
-    offsets-only checkpoint."""
-    import datetime
-
-    base = tempfile.mkdtemp()
-    landing = os.path.join(base, "pages")
-    out = os.path.join(base, "curated")
-    ckpt = os.path.join(base, "ckpt")
-    try:
-        t0 = datetime.datetime(2026, 1, 1, 12, 0, 0)
-        good = ("the quick brown fox jumps over the lazy dog and then "
-                "it is resting in the shade of a big tree for an hour")
-        spammy = ("the spam the spam the spam the spam the spam the "
-                  "spam the spam the spam the spam the spam the spam "
-                  "in it and it is a spam of the spam for the spam")
-        rows = [
-            ("https://good.site.org/a", t0, None, good, "en"),
-            ("https://sub.blocked.net/b", t0, None, good, "en"),  # blocklist
-            ("https://ok.org/c", t0, None, spammy, "en"),         # repetition
-        ]
-        spark.createDataFrame(rows, streaming.PAGES_SCHEMA) \
-            .write.parquet(landing)
-        q = streaming.stream_curated_pages(
-            streaming.stream_pages(spark, landing), out, ckpt,
-            blocked_hosts=["blocked.net"], max_dup_word_frac=0.5)
-        q.awaitTermination(120)
-        got = spark.read.parquet(out).collect()
-        assert [r.url for r in got] == ["https://good.site.org/a"]
-        assert got[0].dup_word_frac <= 0.5
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-
-
-def test_stream_perplexity_matches_batch_twin(spark):
-    """Streaming perplexity scoring against a pre-built LM equals the
-    batch operator on the same pages, and the gate filters high-ppl
-    rows."""
-    import datetime
-
-    from lexmapr_spark.ops import textstats
-
-    base = tempfile.mkdtemp()
-    landing = os.path.join(base, "pages")
-    out = os.path.join(base, "scored")
-    ckpt = os.path.join(base, "ckpt")
-    try:
-        t0 = datetime.datetime(2026, 1, 1, 12, 0, 0)
-        rows = [
-            ("u1", t0, None, "the cat sat on the mat", "en"),
-            ("u2", t0, None, "the cat sat on the mat again", "en"),
-            ("u3", t0, None, "zebra quantum xylophone", "en"),  # OOV-ish
-        ]
-        pages = spark.createDataFrame(rows, streaming.PAGES_SCHEMA)
-        pages.write.parquet(landing)
-        lm_src = spark.createDataFrame(
-            [(1, "the cat sat on the mat and the dog sat too")],
-            "doc_id LONG, text STRING")
-        lm = textstats.unigram_lm(lm_src).persist()
-        q = streaming.stream_perplexity_pages(
-            streaming.stream_pages(spark, landing), lm, out, ckpt)
-        q.awaitTermination(120)
-        got = {r.url: r for r in spark.read.parquet(out).collect()}
-        want = {r.url: r for r in textstats.perplexity(
-            pages, lm=lm, id_col="url", text_col="text").collect()}
-        assert set(got) == set(want) == {"u1", "u2", "u3"}
-        for u in want:
-            assert got[u].cross_entropy == want[u].cross_entropy
-            assert got[u].perplexity == want[u].perplexity
-        # OOV-heavy page scores strictly worse than in-vocab pages
-        assert got["u3"].perplexity > got["u1"].perplexity
-
-        # gated variant drops the OOV-heavy page
-        out2, ckpt2 = os.path.join(base, "s2"), os.path.join(base, "c2")
-        cutoff = (got["u1"].perplexity + got["u3"].perplexity) / 2
-        q2 = streaming.stream_perplexity_pages(
-            streaming.stream_pages(spark, landing), lm, out2, ckpt2,
-            max_perplexity=cutoff)
-        q2.awaitTermination(120)
-        kept = {r.url for r in spark.read.parquet(out2).collect()}
-        assert "u3" not in kept and "u1" in kept
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-
-
-def test_stream_index_deduped_pages_matches_batch_twin(spark):
-    """The streaming cross-run dedup gate (stream-static anti joins
-    against a stored minhash index) keeps exactly the urls the batch
-    twin keeps, and its checkpoint is offsets-only (stateless)."""
-    import datetime
-
-    from lexmapr_spark.ops import dedup
-
-    base = tempfile.mkdtemp()
-    landing = os.path.join(base, "pages")
-    idx_dir = os.path.join(base, "index")
-    out = os.path.join(base, "kept")
-    ckpt = os.path.join(base, "ckpt")
-    try:
-        boiler = ("breaking news about distributed query engines and "
-                  "their shuffle strategies in production today ")
-        old = spark.createDataFrame(
-            [(1, boiler * 3),
-             (2, "archived article on ontologies and lexicons"),
-             (3, "")],   # indexed empty doc: NULL minhash signature
-            "doc_id LONG, text STRING")
-        dedup.minhash_index(old).write.parquet(idx_dir)
-        index = spark.read.parquet(idx_dir)
-
-        t0 = datetime.datetime(2026, 1, 2, 9, 0, 0)
-        rows = [
-            ("u-exact", t0, None, boiler * 3, "en"),        # exact dup
-            ("u-near", t0, None, boiler * 3 + "zk9", "en"),  # near dup
-            ("u-new", t0, None,
-             "completely fresh reporting with novel vocabulary qp3",
-             "en"),
-            # empty text: exact dup of indexed doc 3 via md5("") — the
-            # NEAR screen must not see it (NULL signatures are banned
-            # from banding: every empty doc would share one md5("")
-            # bucket, a hot bucket whose pairs can never drop)
-            ("u-empty", t0, None, "", "en"),
-            # NULL text: md5(NULL) is NULL on BOTH paths, so it never
-            # matches the indexed empty doc — the gate must keep it
-            # (md5(coalesce(text, '')) would wrongly drop it here)
-            ("u-null", t0, None, None, "en"),
-        ]
-        spark.createDataFrame(rows, streaming.PAGES_SCHEMA) \
-            .write.parquet(landing)
-        q = streaming.stream_index_deduped_pages(
-            streaming.stream_pages(spark, landing), index, out, ckpt)
-        q.awaitTermination(120)
-        got = sorted(r.url for r in spark.read.parquet(out).collect())
-        assert got == ["u-new", "u-null"]
-
-        # pinned equal to the batch twin on the same rows
-        batch = dedup.dedup_against_index(
-            spark.read.parquet(landing).select(
-                F.col("url").alias("doc_id"), "text"),
-            index, threshold=0.5)
-        assert sorted(r.doc_id for r in batch.collect()) == got
-
-        # stateless: checkpoint has offsets but no state store dirs
-        assert os.path.isdir(os.path.join(ckpt, "offsets"))
-        assert not os.path.isdir(os.path.join(ckpt, "state"))
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-
-
-def test_stream_bm25_matches_batch_twin(spark):
-    """Standing-query BM25 routing: streaming scores equal the batch
-    twin (bm25_score_static with the same frozen index stats), pages
-    without query terms never appear, and min_score gates."""
-    import datetime
-
-    from lexmapr_spark.ops import search
-
-    base = tempfile.mkdtemp()
-    landing = os.path.join(base, "pages")
-    store = os.path.join(base, "bm25_store")
-    out = os.path.join(base, "matched")
-    ckpt = os.path.join(base, "ckpt")
-    try:
-        # reference corpus -> frozen index stats
-        ref = spark.createDataFrame(
-            [(1, "cat mat cat"), (2, "dog mat"), (3, "zebra quantum"),
-             (4, "cat dog mat mat")],
-            "doc_id LONG, text STRING")
-        search.build_bm25_index(ref, store, n_buckets=8)
-
-        t0 = datetime.datetime(2026, 1, 1, 12, 0, 0)
-        rows = [
-            ("u1", t0, None, "the cat sat on the mat", "en"),
-            ("u2", t0, None, "zebra zebra crossing", "en"),
-            ("u3", t0, None, "nothing relevant here", "en"),
-            ("u4", t0, None, None, "en"),
-        ]
-        pages = spark.createDataFrame(rows, streaming.PAGES_SCHEMA)
-        pages.write.parquet(landing)
-        terms = ["cat", "zebra"]
-        q = streaming.stream_bm25_matches(
-            streaming.stream_pages(spark, landing), store, terms,
-            out, ckpt, n_buckets=8)
-        q.awaitTermination(120)
-        got = {r.url: r.score for r in spark.read.parquet(out).collect()}
-        stats = search.bm25_index_stats(spark, store, terms, n_buckets=8)
-        want = {r.url: r.score
-                for r in search.bm25_score_static(
-                    pages, terms, stats, id_col="url",
-                    text_col="text").collect()}
-        assert got == want and set(got) == {"u1", "u2"}
-        # rare 'zebra' (df=1) outweighs 'cat' (df=2) at equal-ish tf
-        assert got["u2"] > got["u1"]
-
-        # min_score gate keeps only the high scorer; replayed batch
-        # ids stay idempotent (partitioned overwrite)
-        out2, ckpt2 = os.path.join(base, "m2"), os.path.join(base, "c2")
-        cutoff = (got["u1"] + got["u2"]) / 2
-        q2 = streaming.stream_bm25_matches(
-            streaming.stream_pages(spark, landing), store, terms,
-            out2, ckpt2, min_score=cutoff, n_buckets=8)
-        q2.awaitTermination(120)
-        kept = {r.url for r in spark.read.parquet(out2).collect()}
-        assert kept == {"u2"}
-    finally:
-        shutil.rmtree(base, ignore_errors=True)
-
-
-def test_stream_asof_joined_matches_batch_twin(spark):
-    """Streaming as-of enrichment against a static right side equals
-    the batch asof_join on the same rows, including NULL-payload left
-    rows with no qualifying match."""
-    import datetime
-
-    from lexmapr_spark.ops import joins
-
-    base = tempfile.mkdtemp()
-    landing = os.path.join(base, "purchases")
-    out = os.path.join(base, "joined")
-    ckpt = os.path.join(base, "ckpt")
-    try:
-        t0 = datetime.datetime(2026, 1, 1, 12, 0, 0)
-
-        def ts(m):
-            return t0 + datetime.timedelta(minutes=m)
-
-        purchases = spark.createDataFrame(
-            [(1, 7, ts(5)), (2, 7, ts(0)), (3, 8, ts(9)), (4, 9, ts(3))],
-            "pid LONG, user_id LONG, ts TIMESTAMP")
-        clicks = spark.createDataFrame(
-            [(7, ts(1), 100), (7, ts(5), 101), (7, ts(5), 102),
-             (8, ts(2), 200)],
-            "user_id LONG, ts TIMESTAMP, click_id LONG")
-        purchases.write.parquet(landing)
-        stream = (spark.readStream.schema(purchases.schema)
-                  .option("maxFilesPerTrigger", "1").parquet(landing))
-        q = streaming.stream_asof_joined(
-            stream, clicks, "user_id", out, ckpt,
-            payload_cols=["click_id"], tiebreak_col="click_id")
-        q.awaitTermination(120)
-        got = {r.pid: r.click_id_matched
-               for r in spark.read.parquet(out).collect()}
-        want = {r.pid: r.click_id_matched
-                for r in joins.asof_join(
-                    purchases, clicks, "user_id",
-                    payload_cols=["click_id"],
-                    tiebreak_col="click_id").collect()}
-        assert got == want
-        assert got == {1: 102, 2: None, 3: 200, 4: None}
-        # restart over the same checkpoint: no duplicate rows appear
-        q2 = streaming.stream_asof_joined(
-            (spark.readStream.schema(purchases.schema)
-             .option("maxFilesPerTrigger", "1").parquet(landing)),
-            clicks, "user_id", out, ckpt,
-            payload_cols=["click_id"], tiebreak_col="click_id")
-        q2.awaitTermination(120)
-        assert spark.read.parquet(out).count() == 4
-
-        # nearest direction rides the same verbatim-batch-op twin:
-        # pid 2 at minute 0 has no prior click but minute-1 click 100
-        # is nearest; pid 4 (user 9) still has nothing
-        out_n = os.path.join(base, "joined_nearest")
-        ckpt_n = os.path.join(base, "ckpt_nearest")
-        qn = streaming.stream_asof_joined(
-            (spark.readStream.schema(purchases.schema)
-             .option("maxFilesPerTrigger", "1").parquet(landing)),
-            clicks, "user_id", out_n, ckpt_n,
-            payload_cols=["click_id"], tiebreak_col="click_id",
-            direction="nearest")
-        qn.awaitTermination(120)
-        got_n = {r.pid: r.click_id_matched
-                 for r in spark.read.parquet(out_n).collect()}
-        assert got_n == {1: 102, 2: 100, 3: 200, 4: None}
     finally:
         shutil.rmtree(base, ignore_errors=True)
