@@ -916,10 +916,12 @@ def run_full_artifacts(pages: DataFrame, lex_bc, out_dir: str,
 
 def _session_parallelism(spark) -> int:
     """The session's configured shuffle parallelism (falls back to the
-    cluster's default parallelism when the conf is non-numeric)."""
+    cluster's default parallelism when the conf is non-numeric; any
+    other error reading the conf propagates)."""
+    value = spark.conf.get("spark.sql.shuffle.partitions")
     try:
-        return int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:
+        return int(value)
+    except ValueError:
         return spark.sparkContext.defaultParallelism
 
 

@@ -19,14 +19,23 @@ Scale notes
   we enumerate permutations to find the exact reference winner, so
   worst-case semantics are identical but the common case is ~100x
   cheaper.
+* The component tier walks every ``combinations(tokens, k)`` chunk
+  (k = 5..1) for samples under 15 tokens, and almost none of them can
+  hit a map. A candidate index, built once per lexicon object, lists
+  every 1..5-token key of the four canonical maps under its rarest
+  token; ``_spelled_chunks`` emits only the chunks some key can spell,
+  in ``combinations()`` order, and the loop body is unchanged. Every
+  skipped chunk would have missed all four probes and changed no
+  state, so results are identical (``_get_gram_chunks`` stays the
+  reference enumeration, and the path for 15+ tokens).
 """
 
 from __future__ import annotations
 
 import re
-from collections import OrderedDict
+from collections import Counter, OrderedDict
 from dataclasses import dataclass, field
-from itertools import combinations, permutations
+from itertools import chain, combinations, groupby, permutations, product
 
 from lexmapr_spark.lexicon import Lexicon, canonical_key
 from lexmapr_spark.textops import (
@@ -309,6 +318,65 @@ def _get_gram_chunks(input_str: str, num: int, tokens: list | None = None):
     return [tuple(split[i:i + num]) for i in range(len(split) - num + 1)]
 
 
+def _candidate_index(lex: Lexicon) -> dict:
+    """token -> every 1..5-token key of ``canon_labels``, ``canon_perms``,
+    ``canon_syns`` and ``suffix_bases`` whose rarest token it is (ties
+    broken by the token string). Holds the maps' own key strings. Built
+    once per lexicon object and kept in its ``__dict__`` (not a field,
+    so ``content_hash()`` is unchanged), like the token memo, so finish
+    mutating a lexicon before matching with it."""
+    index = lex.__dict__.get("_candidate_index")
+    if index is None:
+        keys = {k for m in (lex.canon_labels, lex.canon_perms,
+                            lex.canon_syns, lex.suffix_bases)
+                for k in m if k and k.count(" ") < 5}
+        freq = Counter(t for k in keys for t in set(k.split()))
+        index = {}
+        for k in keys:
+            rarest = min(k.split(), key=lambda t: (freq[t], t))
+            index.setdefault(rarest, []).append(k)
+        lex.__dict__["_candidate_index"] = index
+    return index
+
+
+def _spelled_chunks(tokens: list, lex: Lexicon) -> list:
+    """Per gram size 1..5 (list index), the ``combinations(tokens,
+    size)`` chunks whose canonical key is a key of one of the four
+    canonical maps, in ``combinations()`` order.
+
+    Every other chunk of ``_get_gram_chunks`` misses all four probes of
+    ``_match_chunk_any_permutation`` and changes no state, so the
+    component loop may skip it. Each key whose token multiset fits in
+    the sample's is found under its rarest token; every choice of
+    positions that spells it is one chunk, and sorting the position
+    tuples of one size restores the lexicographic order in which
+    ``combinations()`` yields them. Keys are canonical (sorted), so
+    ``groupby`` counts each distinct token's copies."""
+    index = _candidate_index(lex)
+    where: dict = {}
+    for i, t in enumerate(tokens):
+        where.setdefault(t, []).append(i)
+    spelled: list = [[] for _ in range(6)]
+    for t in where:
+        for key in index.get(t, ()):
+            key_tokens = key.split()
+            if not all(map(where.__contains__, key_tokens)):
+                continue
+            picks = []
+            for kt, run in groupby(key_tokens):
+                pos = where[kt]
+                need = sum(1 for _ in run)
+                if len(pos) < need:
+                    break
+                picks.append(combinations(pos, need))
+            else:
+                spelled[len(key_tokens)].extend(
+                    sorted(chain.from_iterable(parts))
+                    for parts in product(*picks))
+    return [[tuple(tokens[p] for p in pos) for pos in sorted(group)]
+            for group in spelled]
+
+
 def _discard_subsumed_words(word_list: list, retained: list) -> list:
     """pipeline_helpers.py:311-337 semantics (quirks preserved)."""
     for word in word_list:
@@ -411,8 +479,14 @@ def process_sample(sample_id: str, original_sample: str, lex: Lexicon,
             for t in set(cleaned_tokens)
             for plain in (_PLAIN_TOKEN.match(t) is not None,)
         }
+        # under 15 tokens, visit only the chunks that some lexicon key
+        # can spell (the rest cannot match); longer samples keep the
+        # reference's contiguous windows
+        spelled = (_spelled_chunks(cleaned_tokens, lex)
+                   if len(cleaned_tokens) < 15 else None)
         for i in range(5, 0, -1):
-            for gram_chunk in _get_gram_chunks(cleaned, i, cleaned_tokens):
+            for gram_chunk in (spelled[i] if spelled is not None else
+                               _get_gram_chunks(cleaned, i, cleaned_tokens)):
                 # vocabulary pruning: a chunk with any token outside
                 # the lexicon token vocabulary cannot match any tier
                 # (matching only ever ADDS suffix tokens), and skipping

@@ -602,7 +602,6 @@ def unigram_lm(docs: DataFrame, text_col: str = "text",
 
 def perplexity(docs: DataFrame, lm: DataFrame | None = None,
                id_col: str = "doc_id", text_col: str = "text",
-               broadcast_lm: bool | None = None,
                tokenizer=None) -> DataFrame:
     """Per-document cross-entropy + perplexity under a unigram LM —
     the standard cheap quality proxy for training-data curation
@@ -619,14 +618,12 @@ def perplexity(docs: DataFrame, lm: DataFrame | None = None,
     with zero tokens are dropped (no distribution to score).
 
     Scale shape: explode -> hash join tokens to the LM -> one
-    map-side-combinable groupBy(doc). The LM side is BROADCAST BY
-    DEFAULT (``broadcast_lm=None`` behaves like True — right for the
-    usual capped/``top_k`` vocabulary); for an uncapped
-    100 TB-corpus vocabulary pass ``broadcast_lm=False`` so
-    Catalyst/AQE picks the join strategy instead of forcing a
-    driver-sized broadcast. Per-doc sums use DECIMAL(28,6) so the
-    result is independent of partitioning/summation order — then one
-    double division + exp at the end, rounded to 6.
+    map-side-combinable groupBy(doc). The LM side is always
+    BROADCAST, which suits the usual capped/``top_k`` vocabulary; an
+    uncapped vocabulary too large to broadcast needs a shuffle join
+    instead. Per-doc sums use DECIMAL(28,6) so the result is
+    independent of partitioning/summation order — then one double
+    division + exp at the end, rounded to 6.
     """
     if lm is None:
         # scoped: each perplexity call releases the previous
@@ -645,10 +642,8 @@ def perplexity(docs: DataFrame, lm: DataFrame | None = None,
         F.round(F.log(1.0 / (F.max("lm_total") + 1.0)), 6)
          .cast("decimal(28,6)").alias("oov_lp"))
 
-    lm_side = lm.select("token", F.col("logprob").cast("decimal(28,6)")
-                        .alias("logprob"))
-    if broadcast_lm or broadcast_lm is None:
-        lm_side = F.broadcast(lm_side)
+    lm_side = F.broadcast(lm.select(
+        "token", F.col("logprob").cast("decimal(28,6)").alias("logprob")))
     doc_toks = fan_out(docs).select(
         F.col(id_col),
         F.explode((tokenizer or tokens_col)(F.col(text_col)))

@@ -1019,3 +1019,23 @@ def test_narrow_hand_off_matches_full(spark, lex_bc):
         assert want.exceptAll(back).count() == 0
     finally:
         shutil.rmtree(out, ignore_errors=True)
+
+
+def _stub_session(conf_get):
+    """Just the two session attributes ``_session_parallelism`` reads."""
+    from types import SimpleNamespace
+    return SimpleNamespace(conf=SimpleNamespace(get=conf_get),
+                           sparkContext=SimpleNamespace(defaultParallelism=7))
+
+
+def test_session_parallelism_non_numeric_conf_falls_back():
+    assert engine._session_parallelism(_stub_session(lambda key: "12")) == 12
+    assert engine._session_parallelism(_stub_session(lambda key: "auto")) == 7
+
+
+def test_session_parallelism_conf_error_propagates():
+    def broken_get(key):
+        raise RuntimeError("conf unavailable")
+
+    with pytest.raises(RuntimeError, match="conf unavailable"):
+        engine._session_parallelism(_stub_session(broken_get))

@@ -67,7 +67,15 @@ def test_data_bound_oracle_builders_raise_on_error(monkeypatch, builder):
         getattr(entrymod, builder)()
 
 
-def test_oracled_queries_are_scalar_only(spark):
+@pytest.fixture(scope="module")
+def schemas(spark):
+    """Every contract query's output schema, each plan built once for
+    the schema checks below."""
+    return {name: fn(spark, SF).schema
+            for name, fn in sorted(entrymod.queries().items())}
+
+
+def test_oracled_queries_are_scalar_only(schemas):
     """Driver-canonicalizer hazard guard: the correctness harness sorts
     raw result columns with pandas, which cannot sort array/map/struct
     cells — every oracled query must therefore emit scalar columns only
@@ -75,17 +83,16 @@ def test_oracled_queries_are_scalar_only(spark):
     from pyspark.sql.types import ArrayType, MapType, StructType
 
     oracled = set(entrymod.oracle_sql())
-    qs = entrymod.queries()
     offenders = []
     for name in sorted(oracled):
-        schema = qs[name](spark, SF).schema
+        schema = schemas[name]
         for field in schema.fields:
             if isinstance(field.dataType, (ArrayType, MapType, StructType)):
                 offenders.append(f"{name}.{field.name}: {field.dataType}")
     assert not offenders, offenders
 
 
-def test_no_decimal_outputs(spark):
+def test_no_decimal_outputs(schemas):
     """r7 verdict: Spark.toPandas() renders DECIMAL columns as
     decimal.Decimal objects while DuckDB .df() yields float64 — hash
     normalizers that stringify rather than coerce see them differ even
@@ -96,8 +103,8 @@ def test_no_decimal_outputs(spark):
     from pyspark.sql.types import DecimalType
 
     offenders = []
-    for name, fn in sorted(entrymod.queries().items()):
-        for field in fn(spark, SF).schema.fields:
+    for name, schema in sorted(schemas.items()):
+        for field in schema.fields:
             if isinstance(field.dataType, DecimalType):
                 offenders.append(f"{name}.{field.name}: {field.dataType}")
     assert not offenders, offenders

@@ -1,9 +1,18 @@
 """Matcher semantics tests: unit cases from the reference suite plus
 the golden end-to-end corpus (the north rule's P/R >= 0.95 gate)."""
 
+import random
+from dataclasses import asdict
+
 import pytest
 
-from lexmapr_spark.lexicon import Lexicon, compute_ancestor_closure, default_lexicon
+from lexmapr_spark import matcher
+from lexmapr_spark.lexicon import (
+    Lexicon,
+    compile_predefined,
+    compute_ancestor_closure,
+    default_lexicon,
+)
 from lexmapr_spark.matcher import (
     _get_gram_chunks,
     _match_chunk_any_permutation,
@@ -11,6 +20,7 @@ from lexmapr_spark.matcher import (
     map_term,
     process_sample,
 )
+from lexmapr_spark.pages import load_corpus
 from tests.golden_harness import GOLDEN_FULL_CASES, corpus_precision_recall
 
 
@@ -50,6 +60,97 @@ def test_gram_chunks_contiguous_at_15():
     chunks = _get_gram_chunks(text, 2)
     assert chunks[0] == ("t0", "t1")
     assert len(chunks) == 14
+
+
+# --- spelled-chunk component loop vs the combinations() loop --------------
+
+# fixed texts for each adversarial kind the generated ones may miss
+_SPECIAL_TEXTS = [
+    "e.coli isolated from raw chicken breast",
+    "escherichia coli o26:h11 from ground beef",
+    "ground beef (raw) and pork (cooked)",
+    "can't confirm chicken breast, frozen",
+    "collected 2019-03-04 from pork shoulder",
+    "collected march 3 2019 from turkey",
+    "sample 12 of 3.5 kg beef, lot 0042",
+    "gallus gallus domesticus egg",
+    "gallus gallus breast gallus",
+    "chicken chicken breast breast chicken",
+    "salmonella salmonella enterica enterica pork",
+    "leaf banana banana leaf",
+]
+
+
+def _differential_texts(lex):
+    """A seeded, fixed list: corpus descriptions, crawl-style pages of
+    1-3 descriptions, and adversarial texts of every kind (shuffled
+    labels, prefix + label + suffix, repeated tokens, punctuation
+    tokens, dates, numbers, 13-16 tokens)."""
+    rng = random.Random(20261019)
+    corpus = load_corpus()
+    labels = sorted(lb for lb in lex.standard_resource_labels
+                    if 1 <= len(lb.split()) <= 5)
+    multi = [lb for lb in labels if len(lb.split()) >= 2]
+    vocab = sorted(lex.vocab)
+    suffixes = sorted(lex.suffixes)
+    specials = ["e.coli", "o26:h11", "(raw)", "can't", "2019-03-04",
+                "12", "3.5", "zzq", "blorp"]
+    texts = rng.sample(corpus, 1500)
+    texts += [". ".join(rng.sample(corpus, rng.choice((1, 2, 3))))
+              for _ in range(400)]
+    texts += _SPECIAL_TEXTS
+    for _ in range(200):    # shuffled labels
+        toks = rng.choice(multi).split()
+        rng.shuffle(toks)
+        texts.append(" ".join(toks))
+    for _ in range(200):    # prefix + label + suffix
+        texts.append(" ".join([rng.choice(vocab + specials),
+                               rng.choice(labels), rng.choice(suffixes)]))
+    for _ in range(150):    # repeated tokens
+        toks = rng.choice(multi).split()
+        toks += rng.choices(toks, k=rng.randint(1, 4))
+        rng.shuffle(toks)
+        texts.append(" ".join(toks))
+    for _ in range(150):    # specials inside label text
+        toks = rng.choice(labels).split() + rng.sample(specials, 2)
+        rng.shuffle(toks)
+        texts.append(" ".join(toks))
+    for _ in range(300):    # 13-16 tokens around the 15-token switch
+        toks: list = []
+        while len(toks) < 13:
+            toks += rng.choice(labels + vocab).split()
+        texts.append(" ".join(toks[:rng.randint(13, 16)]))
+    return texts
+
+
+def _combinations_chunks(tokens, lex):
+    """The reference enumeration: every ``combinations()`` chunk (the
+    under-15-token branch of ``_get_gram_chunks``), per gram size."""
+    return [_get_gram_chunks("", size, tokens) for size in range(6)]
+
+
+@pytest.mark.parametrize("golden_parity", [True, False])
+def test_spelled_chunks_process_sample_equals_combinations_loop(
+        monkeypatch, golden_parity):
+    lex = default_lexicon() if golden_parity else compile_predefined(
+        golden_parity=False)
+    texts = _differential_texts(lex)
+    tiers: dict = {}
+    for classify in (False, True):
+        for text in texts:
+            got = asdict(process_sample("s", text, lex, classify=classify))
+            with monkeypatch.context() as mp:
+                mp.setattr(matcher, "_spelled_chunks", _combinations_chunks)
+                want = asdict(process_sample("s", text, lex,
+                                             classify=classify))
+            assert got == want, text
+            key = (got["macro_status"], min(len(got["sample_tokens"]), 16))
+            tiers[key] = tiers.get(key, 0) + 1
+    # the inputs reach the component tier on both sides of the switch
+    for n in (2, 5, 13, 14, 15, 16):
+        assert tiers.get(("Component Match", n), 0) >= 2, (n, tiers)
+    assert sum(v for (m, n), v in tiers.items()
+               if m == "Component Match" and n < 15) >= 1000, tiers
 
 
 # --- ancestor closure -------------------------------------------------------

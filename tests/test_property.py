@@ -7,14 +7,15 @@ for every chunk — including which match wins and its status list.
 """
 
 from collections import OrderedDict
-from itertools import permutations
+from itertools import combinations, permutations
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from lexmapr_spark.lexicon import default_lexicon
+from lexmapr_spark.lexicon import canonical_key, default_lexicon
 from lexmapr_spark.matcher import (
     _match_chunk_any_permutation,
+    _spelled_chunks,
     map_term,
     process_sample,
 )
@@ -49,6 +50,42 @@ def test_canonical_matcher_equals_reference_bruteforce(chunk):
     fast = _match_chunk_any_permutation(tuple(chunk), LEX)
     slow = reference_match_chunk(tuple(chunk), LEX)
     assert fast == slow
+
+
+# the four maps a component chunk is probed against
+_CANON_MAPS = (LEX.canon_labels, LEX.canon_perms, LEX.canon_syns,
+               LEX.suffix_bases)
+# multi-token keys, so drawn samples spell more than single tokens
+_KEY_TOKENS = [k.split() for k in sorted(LEX.canon_labels)[::53]
+               if 2 <= len(k.split()) <= 5]
+
+
+@st.composite
+def sample_token_lists(draw):
+    """Under 15 tokens: vocabulary and noise tokens, whole keys, and
+    repeats of any of them, in any order."""
+    base = draw(st.lists(token_strategy, max_size=8))
+    for key in draw(st.lists(st.sampled_from(_KEY_TOKENS), max_size=2)):
+        base += key
+    if base:
+        base += draw(st.lists(st.sampled_from(base), max_size=4))
+    return draw(st.permutations(base))[:14]
+
+
+@settings(max_examples=300, deadline=None)
+@given(sample_token_lists())
+def test_spelled_chunks_are_the_hittable_combinations(tokens):
+    """The component loop's chunks of each size are a subsequence of
+    ``combinations(tokens, size)`` holding every combination whose
+    canonical key is in one of the four maps."""
+    spelled = _spelled_chunks(tokens, LEX)
+    for size in range(1, 6):
+        combos = list(combinations(tokens, size))
+        rest = iter(combos)
+        assert all(chunk in rest for chunk in spelled[size])
+        hittable = [c for c in combos
+                    if any(canonical_key(c) in m for m in _CANON_MAPS)]
+        assert spelled[size] == hittable
 
 
 @settings(max_examples=100, deadline=None)
