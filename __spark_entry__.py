@@ -208,6 +208,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     # ---- per-row invariant: byte-identical extracted text per url
     def kg_text_extraction(spark, sf):
+        from lexmapr_spark.pages import extract_text
         docs = _t(spark, sf, "documents")
         wrapped = docs.select(
             "doc_id",
@@ -215,11 +216,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             F.encode(F.concat(F.lit("<html><body><p>"), F.col("text"),
                               F.lit("</p></body></html>")), "UTF-8"
                      ).alias("html"))
-        return wrapped.select(
+        return extract_text(wrapped).select(
             "doc_id",
-            (F.regexp_extract(F.decode("html", "UTF-8"),
-                              r"<p>(.*)</p>", 1) == F.col("text")
-             ).alias("extraction_ok"))
+            (F.col("extracted_text") == F.col("text")).alias("extraction_ok"))
     q["kg_text_extraction"] = kg_text_extraction
 
     # ---- SURVEY §2.1 S2: multi-column coalesce
@@ -1022,7 +1021,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # ---- C7 confidence scoring (lexmapr_spark/confidence.py)
     # Oracle-checked core: synthetic (tokens, statuses) derived from
     # documents via SQL-expressible transforms, scored with the JVM
-    # confidence_cols expressions; DuckDB independently replicates the
+    # score_confidence expressions; DuckDB independently replicates the
     # penalty fold, the str(set)-membership quirk, and the int-vs-float
     # score rendering. Tokens are non-empty-filtered so instr/strpos
     # agree across engines.
@@ -1049,34 +1048,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                          .otherwise("Synonym Usage")).alias("micro_status"),
                     F.slice("toks", 1, 2).alias("covered_tokens"),
                     F.slice("toks", 2, 2).alias("head_nouns")))
-        # staged form (r9): the inline confidence_cols pair embeds the
-        # score expression inside every rendered-level branch, and
-        # interpreted HOF lambdas get no subexpression elimination —
-        # the penalty fold re-evaluated ~10x per row. Staging each
-        # non-cheap expression as an attribute column (the same
-        # builders + layout as conf.with_confidence) evaluates each
-        # exactly once; output values identical (same expressions,
-        # pinned by the contract oracle).
-        staged = (
-            base
-            .withColumn("_penalty",
-                        conf.penalty_weight_col("micro_status"))
-            .withColumn("_nc_hn",
-                        conf.not_covered_hn_col(F.col("head_nouns"),
-                                                F.col("covered_tokens")))
-            .withColumn("_nc",
-                        conf.not_covered_col(F.col("sample_tokens"),
-                                             F.col("covered_tokens"),
-                                             F.col("_nc_hn")))
-            .withColumn("confidence_score",
-                        conf.confidence_score_col(
-                            F.col("macro_status"), F.col("_penalty"),
-                            F.col("_nc"), F.col("_nc_hn")))
-            .withColumn("confidence",
-                        conf.rendered_confidence_col(
-                            F.col("macro_status"),
-                            F.col("confidence_score"))))
-        return staged.select("doc_id", "confidence_score", "confidence")
+        return conf.score_confidence(base, "head_nouns") \
+            .select("doc_id", "confidence_score", "confidence")
     q["conf_scoring"] = conf_scoring
 
     # rows-only (matcher-driven): per-level confidence histogram over

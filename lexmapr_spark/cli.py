@@ -138,20 +138,6 @@ def run(args) -> int:
     lex = load_lexicon_for(args)
     rows = list(read_samples(args.input_file))
 
-    from lexmapr_spark.engine import (
-        WIDE_HEADER_BUCKET,
-        WIDE_HEADERS_BASE,
-        WIDE_HEADERS_BUCKET_FULL,
-        WIDE_HEADERS_FULL,
-    )
-    headers = list(WIDE_HEADERS_BASE)
-    if args.full:
-        headers += WIDE_HEADERS_FULL
-    if args.bucket:
-        if args.full:
-            headers += WIDE_HEADERS_BUCKET_FULL
-        headers += [WIDE_HEADER_BUCKET]
-
     if args.spark is not None:
         from lexmapr_spark import engine
         spark = engine.build_spark(cpus=args.spark, app="lexmapr_cli")
@@ -174,10 +160,13 @@ def run(args) -> int:
             collected = []
         text = engine.render_wide_tsv(collected, full=args.full,
                                       bucket=args.bucket)
-        # render_wide_tsv builds the same header internally
     else:
-        from lexmapr_spark.matcher import format_output_row, process_sample
-        lines = ["\t".join(headers)]
+        from lexmapr_spark.matcher import (
+            format_output_row,
+            process_sample,
+            wide_headers,
+        )
+        lines = ["\t".join(wide_headers(args.full, args.bucket))]
         for sid, desc in rows:
             res = process_sample(sid, desc, lex, classify=args.bucket)
             lines.append("\t".join(format_output_row(

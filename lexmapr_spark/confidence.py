@@ -295,9 +295,8 @@ def confidence_score_col(match_status: Column, penalty: Column,
                          not_covered: Column,
                          not_covered_hn: Column) -> Column:
     """The reference's ``assign_confidence_level`` arithmetic — the
-    SINGLE definition of the 100/90/-6/-10 scoring contract (r7
-    review: :func:`confidence_cols` and :func:`with_confidence` each
-    carried a copy; a tweak to one would silently strand the other)."""
+    SINGLE definition of the 100/90/-6/-10 scoring contract, staged
+    by :func:`score_confidence`."""
     return (
         F.when(match_status.contains("Full Term Match"),
                F.lit(100.0) - penalty)
@@ -318,41 +317,6 @@ def rendered_confidence_col(match_status: Column, score: Column) -> Column:
         | match_status.contains("Component Match"),
         F.format_string("%s (%.1f%%)", confidence_level_col(score), score)
     ).otherwise(F.lit("Low (0%)"))
-
-
-def confidence_cols(sample_tokens: Column | str,
-                    match_status: Column | str,
-                    micro_status: Column | str,
-                    covered_tokens: Column | str,
-                    head_nouns: Column | str,
-                    penalty_dict: dict[str, str] | None = None,
-                    ) -> tuple[Column, Column]:
-    """(confidence_score, confidence) columns — pure Catalyst.
-
-    The exact arithmetic of ``assign_confidence_level`` as JVM
-    expressions: penalty fold + distinct-not-covered counts for the
-    Component Match branch, composed from the shared single-definition
-    builders above. NOTE this inline form re-evaluates the interpreted
-    HOFs per reference; prefer :func:`with_confidence` (which stages
-    them as attribute columns) when adding both output columns to a
-    frame.
-    """
-    sample_tokens = F.col(sample_tokens) \
-        if isinstance(sample_tokens, str) else sample_tokens
-    match_status = F.col(match_status) \
-        if isinstance(match_status, str) else match_status
-    covered_tokens = F.col(covered_tokens) \
-        if isinstance(covered_tokens, str) else covered_tokens
-    head_nouns = F.col(head_nouns) if isinstance(head_nouns, str) \
-        else head_nouns
-
-    penalty = penalty_weight_col(micro_status, penalty_dict)
-    not_covered_hn = not_covered_hn_col(head_nouns, covered_tokens)
-    not_covered = not_covered_col(sample_tokens, covered_tokens,
-                                  not_covered_hn)
-    score = confidence_score_col(match_status, penalty, not_covered,
-                                 not_covered_hn)
-    return score, rendered_confidence_col(match_status, score)
 
 
 def head_nouns_col(text: Column | str) -> Column:
@@ -385,15 +349,16 @@ def head_nouns_col(text: Column | str) -> Column:
     return _hn(F.col(text) if isinstance(text, str) else text)
 
 
-def with_confidence(mentions: DataFrame,
-                    penalty_dict: dict[str, str] | None = None,
-                    text_col: str = "processed_sample") -> DataFrame:
-    """Mention table -> + ``confidence_score`` + ``confidence``.
+def score_confidence(frame: DataFrame, head_nouns: Column | str,
+                     penalty_dict: dict[str, str] | None = None
+                     ) -> DataFrame:
+    """Frame -> + ``confidence_score`` + ``confidence`` — pure Catalyst.
 
-    Expects the opt-in ``sample_tokens`` / ``covered_tokens`` columns
-    from ``engine.annotate(..., confidence=True)``. Head nouns come
-    from one pandas_udf over ``text_col``; everything downstream is
-    JVM expressions — the op adds no shuffle and no extra scan.
+    The exact arithmetic of ``assign_confidence_level`` over the
+    ``sample_tokens`` / ``macro_status`` / ``micro_status`` /
+    ``covered_tokens`` columns and the ``head_nouns`` array: penalty
+    fold + distinct-not-covered counts for the Component Match
+    branch, composed from the single-definition builders above.
 
     The interpreted HOFs (the penalty ``aggregate`` fold and the
     not-covered ``filter``/``exists`` scans) are staged as real
@@ -404,22 +369,18 @@ def with_confidence(mentions: DataFrame,
     CollapseProject keeps non-cheap multi-referenced aliases split,
     so each staged expression is evaluated exactly once per row.
     """
-    from lexmapr_spark.engine import ship_package
-    ship_package(mentions.sparkSession)
     # staging names are created via withColumn, which silently
     # OVERWRITES an existing column of the same name and would then
     # drop it — reject colliding inputs instead (r7 ADVICE)
-    staged = {"_head_nouns", "_penalty", "_nc_hn", "_nc"}
-    clash = sorted(staged & set(mentions.columns))
+    staged = ["_head_nouns", "_penalty", "_nc_hn", "_nc"]
+    clash = sorted(set(staged) & set(frame.columns))
     if clash:
         raise ValueError(
-            f"with_confidence: input columns {clash} collide with "
+            f"score_confidence: input columns {clash} collide with "
             "internal staging names; rename before calling")
-    penalty_dict = penalty_dict if penalty_dict is not None \
-        else load_penalty_dict()
+    head_nouns = F.col(head_nouns) if isinstance(head_nouns, str) \
+        else head_nouns
     macro = F.col("macro_status")
-    # same single-definition builders as confidence_cols, fed STAGED
-    # attribute columns so each interpreted HOF evaluates once per row
     nc_hn = not_covered_hn_col(F.col("_head_nouns"),
                                F.col("covered_tokens"))
     nc = not_covered_col(F.col("sample_tokens"), F.col("covered_tokens"),
@@ -427,12 +388,29 @@ def with_confidence(mentions: DataFrame,
     score = confidence_score_col(macro, F.col("_penalty"), F.col("_nc"),
                                  F.col("_nc_hn"))
     rendered = rendered_confidence_col(macro, F.col("confidence_score"))
-    return (mentions
-            .withColumn("_head_nouns", head_nouns_col(text_col))
+    return (frame
+            .withColumn("_head_nouns", head_nouns)
             .withColumn("_penalty",
                         penalty_weight_col("micro_status", penalty_dict))
             .withColumn("_nc_hn", nc_hn)
             .withColumn("_nc", nc)
             .withColumn("confidence_score", score)
             .withColumn("confidence", rendered)
-            .drop("_head_nouns", "_penalty", "_nc_hn", "_nc"))
+            .drop(*staged))
+
+
+def with_confidence(mentions: DataFrame,
+                    penalty_dict: dict[str, str] | None = None,
+                    text_col: str = "processed_sample") -> DataFrame:
+    """Mention table -> + ``confidence_score`` + ``confidence``.
+
+    Expects the opt-in ``sample_tokens`` / ``covered_tokens`` columns
+    from ``engine.annotate(..., confidence=True)``. Head nouns come
+    from one pandas_udf over ``text_col``; everything downstream is
+    :func:`score_confidence`'s JVM expressions — the op adds no
+    shuffle and no extra scan.
+    """
+    from lexmapr_spark.engine import ship_package
+    ship_package(mentions.sparkSession)
+    return score_confidence(mentions, head_nouns_col(text_col),
+                            penalty_dict)

@@ -40,6 +40,8 @@ from pyspark.sql.types import (
 )
 
 from lexmapr_spark.lexicon import Lexicon, default_lexicon
+from lexmapr_spark.matcher import format_wide_cells, wide_headers
+from lexmapr_spark.ops.util import fan_out
 
 _log = logging.getLogger(__name__)
 
@@ -203,11 +205,13 @@ def annotate(pages: DataFrame, lex_bc, url_col: str = "url",
 
     ``min_partitions``: the matching stage is CPU-bound, so a small
     input (one parquet file -> one task) strands every other core.
-    Default (0 = auto) round-robin-repartitions up to the session's
-    default parallelism when the input has fewer splits — a cheap
-    (url, text)-only shuffle that buys full-cluster fan-out. Pass
-    ``None`` to forbid any shuffle (big scans already arrive with
-    thousands of splits and skip this automatically).
+    The (url, text) projection goes through
+    :func:`lexmapr_spark.ops.util.fan_out` — default (0 = auto)
+    round-robin-repartitions up to the session's default parallelism
+    when the input has fewer splits, a cheap shuffle that buys
+    full-cluster fan-out. Pass ``None`` to forbid any shuffle (big
+    scans already arrive with thousands of splits and skip this
+    automatically).
 
     ``extra_cols``: passthrough columns carried verbatim through the
     Arrow stage (e.g. a partition/bucket id or document metadata) —
@@ -237,10 +241,7 @@ def annotate(pages: DataFrame, lex_bc, url_col: str = "url",
                              F.col(text_col).alias("text"),
                              *[F.col(c) for c in extra_cols])
     extra_fields = [projected.schema[c] for c in extra_cols]
-    if min_partitions is not None:
-        target = min_partitions or pages.sparkSession.sparkContext.defaultParallelism
-        if projected.rdd.getNumPartitions() < target:
-            projected = projected.repartition(target)
+    projected = fan_out(projected, min_partitions)
     names = [f for f in fields if f != "url"]
     extractors = [_EXTRACT[f] for f in names]
 
@@ -332,52 +333,26 @@ def triples(mentions: DataFrame, salt_partitions: int | None = None,
     return t.dropDuplicates(["subj", "pred", "obj"])
 
 
-WIDE_HEADERS_BASE = [
-    "Sample_Id", "Sample_Desc", "Processed_Sample",
-    "Processed_Sample (With Scientific Name)", "Matched_Components",
-    "Match_Status(Macro Level)",
-]
-WIDE_HEADERS_FULL = ["Match_Status(Micro Level)", "Sample_Transformations"]
-WIDE_HEADERS_BUCKET_FULL = ["LexMapr Classification (Full List)",
-                            "LexMapr Bucket", "Third Party Bucket"]
-WIDE_HEADER_BUCKET = "Third Party Classification"
-
-
-def wide_headers(full: bool = True, bucket: bool = False) -> list[str]:
-    """Wide-output header cells (pipeline.py:60-95)."""
-    headers = list(WIDE_HEADERS_BASE)
-    if full:
-        headers += WIDE_HEADERS_FULL
+def _wide_line(r, full: bool, bucket: bool) -> str:
+    """One mention row as a wide-TSV line. ``r`` is a collected
+    ``Row`` or an Arrow-batch tuple; ``p["token"]`` indexes both a
+    struct ``Row`` and an Arrow struct dict."""
+    bucket_cells = {}
     if bucket:
-        if full:
-            headers += WIDE_HEADERS_BUCKET_FULL
-        headers += [WIDE_HEADER_BUCKET]
-    return headers
-
-
-def format_wide_cells(url, sample_desc, processed_sample, sci_name,
-                      matched_components, macro_status,
-                      micro_status=None, transformations=None,
-                      lexmapr_classification=None, lexmapr_bucket=None,
-                      third_party_bucket=None, ifsac_labels=None,
-                      full: bool = True, bucket: bool = False) -> list[str]:
-    """One wide-output row's cells in the reference's rendering
-    (pipeline.py:279-292 — Python str() of lists/dicts).
-    ``transformations`` is an ordered (token, lemma) pair sequence.
-    Shared by the driver-side renderer (:func:`render_wide_tsv`) and
-    the distributed line formatter (:func:`wide_lines`) so the two
-    sinks cannot drift."""
-    cells = [url, sample_desc, processed_sample, sci_name,
-             str(list(matched_components)), macro_status]
-    if full:
-        cells += [str(list(micro_status)),
-                  str(dict(transformations))]
-    if bucket:
-        if full:
-            cells += [lexmapr_classification, lexmapr_bucket,
-                      third_party_bucket]
-        cells += [str(list(ifsac_labels))]
-    return cells
+        bucket_cells = {
+            "lexmapr_classification": r.lexmapr_classification,
+            "lexmapr_bucket": r.lexmapr_bucket,
+            "third_party_bucket": r.third_party_bucket,
+            "ifsac_labels": r.ifsac_labels,
+        }
+    return "\t".join(format_wide_cells(
+        r.url, r.sample_desc, r.processed_sample,
+        r.processed_sample_sci_name, r.matched_components,
+        r.macro_status,
+        micro_status=r.micro_status if full else None,
+        transformations=[(p["token"], p["lemma"])
+                         for p in r.transformations] if full else None,
+        full=full, bucket=bucket, **bucket_cells))
 
 
 def render_wide_tsv(mentions_rows, full: bool = True,
@@ -387,29 +362,15 @@ def render_wide_tsv(mentions_rows, full: bool = True,
     collected mention rows (order preserved by the caller). Driver-side
     — right for stdout-sized runs and golden parity; the scale path is
     :func:`write_wide_tsv`."""
-    out = ["\t".join(wide_headers(full, bucket))]
-    for r in mentions_rows:
-        kwargs = {}
-        if bucket:
-            try:
-                kwargs = {
-                    "lexmapr_classification": r.lexmapr_classification,
-                    "lexmapr_bucket": r.lexmapr_bucket,
-                    "third_party_bucket": r.third_party_bucket,
-                    "ifsac_labels": r.ifsac_labels,
-                }
-            except AttributeError as e:
-                raise ValueError(
-                    "render_wide_tsv(bucket=True) needs mention rows from "
-                    "annotate(..., classify=True)") from e
-        out.append("\t".join(format_wide_cells(
-            r.url, r.sample_desc, r.processed_sample,
-            r.processed_sample_sci_name, r.matched_components,
-            r.macro_status,
-            micro_status=r.micro_status if full else None,
-            transformations=[(p.token, p.lemma) for p in r.transformations]
-            if full else None,
-            full=full, bucket=bucket, **kwargs)))
+    try:
+        body = [_wide_line(r, full, bucket) for r in mentions_rows]
+    except AttributeError as e:
+        if not bucket:
+            raise
+        raise ValueError(
+            "render_wide_tsv(bucket=True) needs mention rows from "
+            "annotate(..., classify=True)") from e
+    out = ["\t".join(wide_headers(full, bucket))] + body
     return "\n".join(out) + "\n"
 
 
@@ -433,25 +394,8 @@ def wide_lines(mentions: DataFrame, full: bool = True,
 
     def fmt(batches):
         for pdf in batches:
-            lines = []
-            for r in pdf.itertuples(index=False):
-                kwargs = {}
-                if bucket:
-                    kwargs = {
-                        "lexmapr_classification": r.lexmapr_classification,
-                        "lexmapr_bucket": r.lexmapr_bucket,
-                        "third_party_bucket": r.third_party_bucket,
-                        "ifsac_labels": r.ifsac_labels,
-                    }
-                lines.append("\t".join(format_wide_cells(
-                    r.url, r.sample_desc, r.processed_sample,
-                    r.processed_sample_sci_name, r.matched_components,
-                    r.macro_status,
-                    micro_status=r.micro_status if full else None,
-                    transformations=[(d["token"], d["lemma"])
-                                     for d in r.transformations]
-                    if full else None,
-                    full=full, bucket=bucket, **kwargs)))
+            lines = [_wide_line(r, full, bucket)
+                     for r in pdf.itertuples(index=False)]
             frame = pd.DataFrame({"line": lines})
             for c in extra_cols:
                 frame[c] = pdf[c].values

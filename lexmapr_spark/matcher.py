@@ -77,6 +77,50 @@ class MatchResult:
 
 
 # ---------------------------------------------------------------------------
+# wide-output format (pipeline.py:60-95,279-292) — pure Python, shared by
+# the CLI, the golden harness and the engine's wide sinks
+# ---------------------------------------------------------------------------
+
+def wide_headers(full: bool = True, bucket: bool = False) -> list[str]:
+    """Wide-output header cells (pipeline.py:60-95)."""
+    headers = ["Sample_Id", "Sample_Desc", "Processed_Sample",
+               "Processed_Sample (With Scientific Name)",
+               "Matched_Components", "Match_Status(Macro Level)"]
+    if full:
+        headers += ["Match_Status(Micro Level)", "Sample_Transformations"]
+    if bucket:
+        if full:
+            headers += ["LexMapr Classification (Full List)",
+                        "LexMapr Bucket", "Third Party Bucket"]
+        headers += ["Third Party Classification"]
+    return headers
+
+
+def format_wide_cells(url, sample_desc, processed_sample, sci_name,
+                      matched_components, macro_status,
+                      micro_status=None, transformations=None,
+                      lexmapr_classification=None, lexmapr_bucket=None,
+                      third_party_bucket=None, ifsac_labels=None,
+                      full: bool = True, bucket: bool = False) -> list[str]:
+    """One wide-output row's cells in the reference's rendering
+    (pipeline.py:279-292 — Python str() of lists/dicts), in
+    :func:`wide_headers` order. ``transformations`` is an ordered
+    (token, lemma) pair sequence; the three full-bucket cells arrive
+    already str()-rendered."""
+    cells = [url, sample_desc, processed_sample, sci_name,
+             str(list(matched_components)), macro_status]
+    if full:
+        cells += [str(list(micro_status)),
+                  str(dict(transformations))]
+    if bucket:
+        if full:
+            cells += [lexmapr_classification, lexmapr_bucket,
+                      third_party_bucket]
+        cells += [str(list(ifsac_labels))]
+    return cells
+
+
+# ---------------------------------------------------------------------------
 # map_term and helpers (pipeline_helpers.py:451-528 semantics)
 # ---------------------------------------------------------------------------
 
@@ -453,14 +497,6 @@ def process_sample(sample_id: str, original_sample: str, lex: Lexicon,
         macro_status = "Full Term Match"
         micro_status += full["status"]
         res.sample_tokens = word_tokenize(cleaned)
-        if classify:
-            from lexmapr_spark.classification import classify_sample
-            cls = classify_sample(sample, matched_components, lex)
-            res.lexmapr_classification = cls["lexmapr_hierarchy_buckets"]
-            res.lexmapr_bucket = cls["lexmapr_final_buckets"]
-            res.third_party_bucket = cls["ifsac_final_buckets"]
-            res.third_party_classification = cls["ifsac_final_labels"]
-            third_party_classification = cls["ifsac_final_labels"]
     else:
         # Component matches (pipeline.py:193-220)
         component_matches: list = []
@@ -543,14 +579,15 @@ def process_sample(sample_id: str, original_sample: str, lex: Lexicon,
 
         if matched_components:
             macro_status = "Component Match"
-        if classify:
-            from lexmapr_spark.classification import classify_sample
-            cls = classify_sample(sample, matched_components, lex)
-            res.lexmapr_classification = cls["lexmapr_hierarchy_buckets"]
-            res.lexmapr_bucket = cls["lexmapr_final_buckets"]
-            res.third_party_bucket = cls["ifsac_final_buckets"]
-            res.third_party_classification = cls["ifsac_final_labels"]
-            third_party_classification = cls["ifsac_final_labels"]
+
+    if classify:
+        from lexmapr_spark.classification import classify_sample
+        cls = classify_sample(sample, matched_components, lex)
+        res.lexmapr_classification = cls["lexmapr_hierarchy_buckets"]
+        res.lexmapr_bucket = cls["lexmapr_final_buckets"]
+        res.third_party_bucket = cls["ifsac_final_buckets"]
+        res.third_party_classification = cls["ifsac_final_labels"]
+        third_party_classification = cls["ifsac_final_labels"]
 
     # unmangled (label, id) pairs for the KG path (ids never contain
     # ':', so last-colon split is exact here)
@@ -577,16 +614,11 @@ def process_sample(sample_id: str, original_sample: str, lex: Lexicon,
 
 def format_output_row(res: MatchResult, full: bool = True,
                       bucket: bool = False) -> list:
-    """Reference TSV cell rendering (pipeline.py:279-290): lists/dicts
-    serialized with Python ``str()``."""
-    row = [res.sample_id, res.sample_desc, res.processed_sample,
-           res.processed_sample_sci_name, str(res.matched_components),
-           res.macro_status]
-    if full:
-        row += [str(res.micro_status), str(res.transformations)]
-    if bucket:
-        if full:
-            row += [str(res.lexmapr_classification), str(res.lexmapr_bucket),
-                    str(res.third_party_bucket)]
-        row += [str(res.third_party_classification)]
-    return row
+    """:func:`format_wide_cells` over one :class:`MatchResult`."""
+    return format_wide_cells(
+        res.sample_id, res.sample_desc, res.processed_sample,
+        res.processed_sample_sci_name, res.matched_components,
+        res.macro_status, res.micro_status, res.transformations.items(),
+        str(res.lexmapr_classification), str(res.lexmapr_bucket),
+        str(res.third_party_bucket), res.third_party_classification,
+        full=full, bucket=bucket)

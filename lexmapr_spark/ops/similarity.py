@@ -509,85 +509,6 @@ def ivf_topk_batch(embeds: DataFrame, query_ids, k: int = 10,
     return _per_query_topk(scored, id_col, k)
 
 
-def build_srp_index(embeds: DataFrame, path: str, n_planes: int = 12,
-                    prefix_bits: int | None = 6, id_col: str = "vec_id",
-                    vec_col: str = "embedding",
-                    mode: str = "overwrite",
-                    target_bucket: int = 256,
-                    corpus_count: int | None = None) -> list:
-    """Materialize the SRP production layout the query docstrings
-    reference: vectors + full signature, PARTITIONED BY the prefix
-    bucket — a multi-probe query then reads only ``len(probes)``
-    directories (``PartitionFilters`` pruning, plan-asserted in the
-    test) instead of scanning the corpus and recomputing signatures.
-    Returns the hyperplanes (persist them next to the index; they are
-    derived from (dim, n_planes, seed) so re-deriving is also fine).
-
-    ``prefix_bits=None`` derives the partition-bucket width from the
-    corpus count (:func:`derive_srp_bits`, expected population
-    ~``target_bucket`` vectors per bucket directory) so a 100x larger
-    corpus gets proportionally more — not fatter — partitions; callers
-    must then size query-side ``prefix_bits`` to match (use the
-    returned ``planes`` length / stored layout to recover it)."""
-    first = embeds.select(vec_col).first()
-    if first is None:
-        raise ValueError("build_srp_index: input DataFrame is empty")
-    if prefix_bits is None:
-        n = corpus_count if corpus_count is not None else embeds.count()
-        prefix_bits = derive_srp_bits(n, target_bucket)
-        if prefix_bits > n_planes:
-            n_planes = prefix_bits
-    planes = srp_hyperplanes(len(first[0]), n_planes)
-    sig = (fan_out(embeds)
-           .withColumn("sig", srp_signature_exact(F.col(vec_col), planes))
-           # "b" prefix: partition VALUES are type-inferred on read,
-           # and a bare bit-string like "010110" would come back as
-           # the integer 10110 (leading zeros lost, probes mismatched)
-           .withColumn("bucket",
-                       F.concat(F.lit("b"),
-                                F.substring("sig", 1, prefix_bits))))
-    sig.write.mode(mode).partitionBy("bucket").parquet(path)
-    return planes
-
-
-def srp_index_topk(index: DataFrame, planes: list, query_id: int,
-                   k: int = 10, prefix_bits: int = 6,
-                   n_probes: int | None = None,
-                   id_col: str = "vec_id",
-                   vec_col: str = "embedding") -> DataFrame:
-    """Top-k over a stored SRP index (:func:`build_srp_index` read
-    back): probe buckets derive driver-side from the query row, and
-    the bucket predicate is a PARTITION filter — the scan touches
-    only the probed directories. Exact cosine re-rank as always."""
-    qrow = (index.where(F.col(id_col) == query_id)
-            .select(vec_col).first())
-    if qrow is None:
-        raise ValueError(f"srp_index_topk: query_id {query_id} not found")
-    qvec = np.asarray(list(qrow[0]), dtype=np.float64)
-    probes = ["b" + p for p in
-              srp_probe_buckets(qvec, np.asarray(planes), prefix_bits,
-                                n_probes)]
-    # broadcast the already-fetched query vector (exact float->double
-    # widening) — an id-filtered re-read of the index would scan every
-    # bucket directory a second time (the id predicate is not a
-    # partition filter)
-    q = index.sparkSession.createDataFrame(
-        [([float(x) for x in qrow[0]],)], "qvec ARRAY<DOUBLE>")
-    cands = (
-        index.where(F.col("bucket").isin(probes))
-        .where(F.col(id_col) != query_id)
-        .crossJoin(F.broadcast(q))
-        .select(
-            F.col(id_col),
-            F.round(
-                _dot(F.col(vec_col), F.col("qvec"))
-                / (_norm(F.col(vec_col)) * _norm(F.col("qvec"))), 6
-            ).alias("cosine"),
-        )
-    )
-    return cands.orderBy(F.desc("cosine"), F.asc(id_col)).limit(k)
-
-
 def write_ivf_index(assigned: DataFrame, path: str,
                     mode: str = "overwrite") -> None:
     """Materialize an IVF index: vectors partitioned by ``ivf_list``.
@@ -880,8 +801,7 @@ def srp_bucketed_topk_quantized(quantized: DataFrame, query_id: int,
                                 n_probes: int | None = None,
                                 id_col: str = "vec_id") -> DataFrame:
     """SRP-bucketed ANN over an int8-quantized table
-    (:func:`quantize_embeddings` output) — the LSH complement to
-    :func:`ivf_topk_quantized`: 4x narrower scans AND bucket-pruned
+    (:func:`quantize_embeddings` output): 4x narrower scans AND bucket-pruned
     candidates, with no float vectors anywhere in the serving path.
 
     Signatures are computed over the DEQUANTIZED codes
@@ -918,8 +838,7 @@ def srp_bucketed_topk_quantized(quantized: DataFrame, query_id: int,
     # scan-side condition (HOFs get no codegen subexpression
     # elimination, so the nested dequantize re-evaluates per fold —
     # measured ~15x slower); the join consumes bucket as a computed
-    # attribute exactly once per row. At scale the stored index makes
-    # bucket a real column and either form prunes.
+    # attribute exactly once per row.
     spark = quantized.sparkSession
     probes_df = spark.createDataFrame([(b,) for b in probes],
                                       "bucket STRING")
@@ -999,61 +918,6 @@ def ann_recall(embeds: DataFrame, method, k: int = 10,
     mean = sum(per_query.values()) / len(per_query) if per_query else 0.0
     return {"recall": round(mean, 4), "per_query": per_query,
             "k": k, "n_queries": len(qids)}
-
-
-def build_quantized_ivf_index(embeds: DataFrame, path: str,
-                              n_lists: int = 16,
-                              id_col: str = "vec_id",
-                              vec_col: str = "embedding") -> np.ndarray:
-    """Materialize the production vector-store layout: int8 codes +
-    per-vector scale, partitioned by IVF list — 4x less storage than
-    the float index AND partition-pruned probes. Returns the centroid
-    codebook (persist it next to the index; it is a few KB).
-    """
-    cents = kmeans_centroids(embeds, k=n_lists, id_col=id_col,
-                             vec_col=vec_col)
-    assigned = ivf_assign(embeds, cents, id_col=id_col, vec_col=vec_col)
-    quantized = quantize_embeddings(embeds, id_col=id_col,
-                                    vec_col=vec_col)
-    index = (assigned.select(id_col, "ivf_list")
-             .join(quantized, id_col))
-    write_ivf_index(index, path)
-    return cents
-
-
-def ivf_topk_quantized(index: DataFrame, centroids, query_id: int,
-                       k: int = 10, nprobe: int = 4,
-                       id_col: str = "vec_id") -> DataFrame:
-    """Top-k over a quantized IVF index (``build_quantized_ivf_index``
-    output read back via :func:`read_ivf_index`): the query's
-    dequantized vector picks the ``nprobe`` nearest lists (driver-side
-    O(n_lists x dim)), the scan prunes to those partitions, and
-    scoring is the scale-invariant integer cosine of
-    :func:`cosine_topk_quantized` — no float vectors anywhere in the
-    serving path.
-    """
-    qrow = index.where(F.col(id_col) == query_id) \
-        .select("qvec", "scale").first()
-    if qrow is None:
-        raise ValueError(
-            f"ivf_topk_quantized: query_id {query_id} not found")
-    cents = np.asarray(centroids, dtype=np.float64)
-    qvec = np.asarray(list(qrow[0]), dtype=np.float64) * float(qrow[1])
-    d = ((cents - qvec[None, :]) ** 2).sum(1)
-    probes = [int(i) for i in np.argsort(d)[:nprobe]]
-
-    q = index.where(F.col(id_col) == query_id).select(
-        F.col("qvec").alias("q_query"))
-    cands = index.where(F.col("ivf_list").isin(probes))
-    dvec = F.col("qvec").cast("array<double>")
-    dq = F.col("q_query").cast("array<double>")
-    scored = (cands.where(F.col(id_col) != query_id)
-              .crossJoin(F.broadcast(q))
-              .select(F.col(id_col),
-                      F.round(_dot(dvec, dq)
-                              / (_norm(dvec) * _norm(dq)), 6)
-                       .alias("cosine_q")))
-    return scored.orderBy(F.desc("cosine_q"), F.asc(id_col)).limit(k)
 
 
 # ---------------------------------------------------------------------------

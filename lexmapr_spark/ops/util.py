@@ -77,8 +77,7 @@ def release_cache(scope: str | None = None) -> None:
 
 def fan_out(df: DataFrame, min_partitions: int | None = 0) -> DataFrame:
     """Round-robin repartition a too-coarse input so CPU-bound stages
-    use the whole cluster (mirrors ``engine.annotate``'s auto
-    fan-out).
+    use the whole cluster (``engine.annotate``'s auto fan-out too).
 
     A single parquet file scans as ONE partition -> one task -> one
     core; real 100 TB inputs arrive with thousands of splits and skip

@@ -129,13 +129,15 @@ def host_rollup(docs: DataFrame, url_col: str = "url",
         F.round(1.0 - F.col("n_distinct_texts") / F.col("n_docs"), 6))
 
 
-# tracking query parameters stripped by normalize_url_col (prefix
+# tracking query parameters stripped by normalize_urls (prefix
 # match for utm_*, exact-or-assigned match for the click ids)
 _TRACKING_PARAM_RE = r"^(utm_|gclid($|=)|fbclid($|=)|msclkid($|=))"
 
 
-def normalize_url_col(url: Column | str) -> Column:
-    """Canonical form of a URL for dedup keys / rollup grouping:
+def normalize_urls(docs: DataFrame, url_col: str = "url",
+                   out_col: str = "canonical_url") -> DataFrame:
+    """Add ``out_col``, the canonical form of ``url_col`` for dedup
+    keys / rollup grouping:
 
     - fragment removed (``#...``);
     - scheme + authority lowercased (NOTE: the WHOLE authority,
@@ -151,58 +153,25 @@ def normalize_url_col(url: Column | str) -> Column:
       re-sorting would conflate genuinely different URLs on servers
       that care about order); a query left empty loses its ``?``.
 
-    Everything stays in whole-stage codegen (regexp / substring /
-    array HOFs — no UDF, no shuffle); strings without a
-    ``scheme://authority`` prefix pass through the same path/query
-    rules unchanged except fragment/tracking stripping, so the column
-    is total over dirty crawl data (NULL in -> NULL out). Every rule
-    is expressed with operations DuckDB mirrors byte-for-byte
-    (regexp_extract / substr / list_filter), keeping the op
-    oracle-checkable.
-    """
-    u = F.col(url) if isinstance(url, str) else url
-    u1 = F.regexp_replace(u, "#.*", "")
-    prefix = F.regexp_extract(
-        u1, r"^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*", 0)
-    rest = u1.substr(F.length(prefix) + F.lit(1), F.length(u1))
-    low = F.lower(prefix)
-    low = (F.when(low.startswith("http://") & low.endswith(":80"),
-                  low.substr(F.lit(1), F.length(low) - F.lit(3)))
-           .when(low.startswith("https://") & low.endswith(":443"),
-                 low.substr(F.lit(1), F.length(low) - F.lit(4)))
-           .otherwise(low))
-    qpos = F.instr(rest, "?")
-    path = F.when(qpos > 0,
-                  rest.substr(F.lit(1), qpos - F.lit(1))).otherwise(rest)
-    qstr = F.when(qpos > 0,
-                  rest.substr(qpos + F.lit(1), F.length(rest))) \
-            .otherwise(F.lit(""))
-    kept = F.filter(
-        F.split(qstr, "&"),
-        lambda x: (x != F.lit("")) & ~x.rlike(_TRACKING_PARAM_RE))
-    fq = F.array_join(kept, "&")
-    return F.concat(
-        low, path,
-        F.when(fq != "", F.concat(F.lit("?"), fq)).otherwise(F.lit("")))
+    Strings without a ``scheme://authority`` prefix pass through the
+    same path/query rules unchanged except fragment/tracking
+    stripping, so the column is total over dirty crawl data (NULL in
+    -> NULL out). Every rule is expressed with operations DuckDB
+    mirrors byte-for-byte (regexp_extract / substr / list_filter),
+    keeping the op oracle-checkable.
 
-
-def normalize_urls(docs: DataFrame, url_col: str = "url",
-                   out_col: str = "canonical_url") -> DataFrame:
-    """:func:`normalize_url_col` with shared subexpressions STAGED as
-    real attributes — the production form for wide scans.
-
-    The single-Column factory inlines the fragment-stripped url and
-    the authority prefix ~30x into one projection; the final assembly
-    contains an array HOF (the tracking-param ``filter``), which
-    drops that projection out of WholeStageCodegen, and interpreted
-    projections have NO common-subexpression elimination — so every
-    regexp would re-run tens of times per row (the identical blowup
-    class measured 7.5x on quantized SRP, round 4). Staging each
-    shared piece (``u1``, ``prefix``, ``rest``, ``lp``, ``path``/
-    ``query``) as a non-cheap multi-referenced alias makes
-    CollapseProject keep the stages split: each regexp runs ONCE per
-    row. Results are identical to the Column factory (pinned by
-    test); still zero shuffles and zero Python.
+    Shared subexpressions are STAGED as real attributes. Inlined into
+    one projection, the fragment-stripped url and the authority
+    prefix would appear ~30x; the final assembly contains an array
+    HOF (the tracking-param ``filter``), which drops that projection
+    out of WholeStageCodegen, and interpreted projections have NO
+    common-subexpression elimination — so every regexp would re-run
+    tens of times per row (the identical blowup class measured 7.5x
+    on quantized SRP, round 4). Staging each shared piece (``u1``,
+    ``prefix``, ``rest``, ``lp``, ``path``/``query``) as a non-cheap
+    multi-referenced alias makes CollapseProject keep the stages
+    split: each regexp runs ONCE per row. Zero shuffles and zero
+    Python.
     """
     u = F.col(url_col)
     s1 = docs.withColumn("_u1", F.regexp_replace(u, "#.*", ""))

@@ -114,7 +114,7 @@ def extract_text(pages: DataFrame) -> DataFrame:
 
     The per-row invariant required by the driver contract: the
     extracted text must equal the ``text`` column byte-for-byte. Done
-    JVM-side (substring arithmetic on the decoded html) — no Python.
+    JVM-side (one regexp over the decoded html) — no Python.
     """
     extracted = F.regexp_extract(
         F.decode(F.col("html"), "UTF-8"), r"<p>(.*)</p>", 1)

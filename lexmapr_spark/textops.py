@@ -183,7 +183,6 @@ _DETOK_STARTING_QUOTES = [
 ]
 
 
-_PLAIN_TOKEN_RE = re.compile(r"^[a-z0-9]+$")
 # detokenizer contraction patterns, precompiled once (NLTK rebuilds
 # them per call via .pattern.replace — same regexes, order preserved:
 # CONTRACTIONS3 first, then CONTRACTIONS2, as in its detokenize())

@@ -159,11 +159,8 @@ def test_confidence_cols_match_pure_python(spark, penalty_dict):
         "sample_tokens ARRAY<STRING>, macro_status STRING, "
         "micro_status ARRAY<STRING>, covered_tokens ARRAY<STRING>, "
         "head_nouns ARRAY<STRING>")
-    score, rendered = C.confidence_cols(
-        "sample_tokens", "macro_status", "micro_status",
-        "covered_tokens", "head_nouns", penalty_dict)
-    got = [r.confidence
-           for r in df.select(rendered.alias("confidence")).collect()]
+    got = [r.confidence for r in
+           C.score_confidence(df, "head_nouns", penalty_dict).collect()]
     want = [C.assign_confidence_level(t, s, m, penalty_dict, set(cv), h)
             for t, s, m, cv, h in ASSIGN_CASES]
     assert got == want

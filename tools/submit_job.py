@@ -47,7 +47,7 @@ def main():
             os.path.abspath(__file__))),
             "lexmapr_spark", "resources", "predefined"))
     lex = compile_predefined(resource_dir=resource_dir)
-    lex_bc = spark.sparkContext.broadcast(lex)
+    lex_bc = engine.broadcast_lexicon(spark, lex)
 
     pages = synth_pages(spark, n_pages)
     t0 = time.time()
