@@ -208,14 +208,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     # ---- per-row invariant: byte-identical extracted text per url
     def kg_text_extraction(spark, sf):
-        from lexmapr_spark.pages import extract_text
+        from lexmapr_spark.pages import _HTML_POST, _HTML_PRE, extract_text
         docs = _t(spark, sf, "documents")
         wrapped = docs.select(
             "doc_id",
             F.col("text"),
-            F.encode(F.concat(F.lit("<html><body><p>"), F.col("text"),
-                              F.lit("</p></body></html>")), "UTF-8"
-                     ).alias("html"))
+            F.encode(F.concat(F.lit(_HTML_PRE), F.col("text"),
+                              F.lit(_HTML_POST)), "UTF-8").alias("html"))
         return extract_text(wrapped).select(
             "doc_id",
             (F.col("extracted_text") == F.col("text")).alias("extraction_ok"))
@@ -1607,6 +1606,8 @@ def _bm25_batch_oracle_sql(queries: list[tuple[str, list[str]]], k: int,
 
 
 def oracle_sql() -> dict[str, str]:
+    from lexmapr_spark.pages import _HTML_POST, _HTML_PRE
+
     stop_list = ",".join(f"'{w}'" for w in _STOPLIST)
     dim_values = ",".join(f"('{t}','{i}')" for t, i in _TOKEN_DIM)
     lang_hits = {
@@ -1679,8 +1680,8 @@ def oracle_sql() -> dict[str, str]:
 
     oracles = {
         "kg_text_extraction":
-            "SELECT doc_id, regexp_extract('<html><body><p>' || text || "
-            "'</p></body></html>', '<p>(.*)</p>', 1) = text "
+            f"SELECT doc_id, regexp_extract('{_HTML_PRE}' || text || "
+            f"'{_HTML_POST}', '<p>(.*)</p>', 1) = text "
             "AS extraction_ok FROM documents",
 
         "s2_multicol_coalesce":

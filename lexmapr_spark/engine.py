@@ -1080,8 +1080,17 @@ def _bucketed_job(pages, lex_bc, out_dir, fp, buckets, comps, stats) -> None:
         stats["triples"] += n_triples
     # one write lands the whole chunk's rows, so the job count does not
     # grow with the bucket count; one part file per manifest/bucket=<b>
-    _write_buckets(spark.createDataFrame(manifest, _MANIFEST_ROW)
-                   .repartition(1)).parquet(dirs["manifest"])
+    _write_buckets(_manifest_frame(spark, manifest)).parquet(dirs["manifest"])
+
+
+def _manifest_frame(spark: SparkSession, rows: list) -> DataFrame:
+    """Manifest ``rows`` (tuples in ``_MANIFEST_ROW`` order) as one
+    partition. A pandas frame goes over Arrow to a local table scan:
+    no Python tasks and no shuffle, which a list of rows would cost (a
+    PythonRDD plus a repartition)."""
+    frame = pd.DataFrame(rows, columns=[
+        col.split()[0] for col in _MANIFEST_ROW.split(", ")])
+    return spark.createDataFrame(frame, _MANIFEST_ROW).coalesce(1)
 
 
 def _bucket_counts(obs, what, buckets, recount, stats) -> dict:

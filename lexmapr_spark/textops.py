@@ -32,37 +32,58 @@ except ImportError:  # pragma: no cover - dateutil is baked in
 # Treebank-style word tokenizer (NLTK 3.8 ``word_tokenize`` semantics)
 # ---------------------------------------------------------------------------
 
+# Every rule below is (regexp, substitution, triggers): any match of the
+# regexp contains one of the trigger literals, so on a text that holds
+# none of them the sub is a no-op and _apply_rules skips it. The check
+# reads the text as it stands at that rule, since earlier subs add the
+# ``, '' and spaces that later rules match.
 _STARTING_QUOTES = [
-    (re.compile("([«“‘„]|[`]+)", re.U), r" \1 "),
-    (re.compile(r"^\""), r"``"),
-    (re.compile(r"(``)"), r" \1 "),
-    (re.compile(r"([ \(\[{<])(\"|\'{2})"), r"\1 `` "),
-    (re.compile(r"(?i)(\')(?!re|ve|ll|m|t|s|d|n)(\w)\b", re.U), r"\1 \2"),
+    (re.compile("([«“‘„]|[`]+)", re.U), r" \1 ", ("«", "“", "‘", "„", "`")),
+    (re.compile(r"^\""), r"``", ('"',)),
+    (re.compile(r"(``)"), r" \1 ", ("``",)),
+    (re.compile(r"([ \(\[{<])(\"|\'{2})"), r"\1 `` ", ('"', "''")),
+    (re.compile(r"(?i)(\')(?!re|ve|ll|m|t|s|d|n)(\w)\b", re.U), r"\1 \2",
+     ("'",)),
 ]
 
 _PUNCTUATION = [
-    (re.compile(r"([»”’])", re.U), r" \1 "),
-    (re.compile(r"([^\.])(\.)([\]\)}>\"\'»”’ ]*)\s*$", re.U), r"\1 \2 \3 "),
-    (re.compile(r"([:,])([^\d])"), r" \1 \2"),
-    (re.compile(r"([:,])$"), r" \1 "),
-    (re.compile(r"\.{2,}", re.U), r" \g<0> "),
-    (re.compile(r"[;@#$%&]"), r" \g<0> "),
-    (re.compile(r"[?!]"), r" \g<0> "),
-    (re.compile(r"([^'])' "), r"\1 ' "),
-    (re.compile(r"[*]", re.U), r" \g<0> "),
+    (re.compile(r"([»”’])", re.U), r" \1 ", ("»", "”", "’")),
+    (re.compile(r"([^\.])(\.)([\]\)}>\"\'»”’ ]*)\s*$", re.U), r"\1 \2 \3 ",
+     (".",)),
+    (re.compile(r"([:,])([^\d])"), r" \1 \2", (":", ",")),
+    (re.compile(r"([:,])$"), r" \1 ", (":", ",")),
+    (re.compile(r"\.{2,}", re.U), r" \g<0> ", ("..",)),
+    (re.compile(r"[;@#$%&]"), r" \g<0> ", (";", "@", "#", "$", "%", "&")),
+    (re.compile(r"[?!]"), r" \g<0> ", ("?", "!")),
+    (re.compile(r"([^'])' "), r"\1 ' ", ("' ",)),
+    (re.compile(r"[*]", re.U), r" \g<0> ", ("*",)),
 ]
 
-_PARENS_BRACKETS = (re.compile(r"[\]\[\(\)\{\}\<\>]"), r" \g<0> ")
+_PARENS_BRACKETS = [
+    (re.compile(r"[\]\[\(\)\{\}\<\>]"), r" \g<0> ",
+     ("(", ")", "[", "]", "{", "}", "<", ">")),
+]
 
-_DOUBLE_DASHES = (re.compile(r"--"), r" -- ")
+_DOUBLE_DASHES = [(re.compile(r"--"), r" -- ", ("--",))]
 
 _ENDING_QUOTES = [
-    (re.compile("([»”’])", re.U), r" \1 "),
-    (re.compile(r"''"), " '' "),
-    (re.compile(r'"'), " '' "),
-    (re.compile(r"([^' ])('[sS]|'[mM]|'[dD]|') "), r"\1 \2 "),
-    (re.compile(r"([^' ])('ll|'LL|'re|'RE|'ve|'VE|n't|N'T) "), r"\1 \2 "),
+    (re.compile("([»”’])", re.U), r" \1 ", ("»", "”", "’")),
+    (re.compile(r"''"), " '' ", ("''",)),
+    (re.compile(r'"'), " '' ", ('"',)),
+    (re.compile(r"([^' ])('[sS]|'[mM]|'[dD]|') "), r"\1 \2 ", ("'",)),
+    (re.compile(r"([^' ])('ll|'LL|'re|'RE|'ve|'VE|n't|N'T) "), r"\1 \2 ",
+     ("'",)),
 ]
+
+
+def _apply_rules(rules, text: str) -> str:
+    for regexp, substitution, triggers in rules:
+        for trigger in triggers:
+            if trigger in text:
+                text = regexp.sub(substitution, text)
+                break
+    return text
+
 
 _CONTRACTIONS2 = [
     re.compile(r"(?i)\b(can)(?#X)(not)\b"),
@@ -83,17 +104,31 @@ _CONTRACTIONS3 = [
 # work as-is for tokenization (the detokenizer swaps it for "\s").
 
 
+def _may_contract(text: str, words) -> bool:
+    """Whether any IGNORECASE contraction rule can match ``text``.
+
+    Each match holds an apostrophe or, case-folded, one of ``words``.
+    ``str.lower()`` is that folding only on ASCII text: ``re`` also
+    matches ``İ ı ſ K`` to ``i i s k``, so non-ASCII text always runs
+    the rules."""
+    if "'" in text or not text.isascii():
+        return True
+    lower = text.lower()
+    return any(word in lower for word in words)
+
+
 # a string of plain lowercase-alnum tokens separated by single spaces
 # tokenizes to its split() — every Treebank rule is a no-op on it,
 # EXCEPT the apostrophe-free MacIntyre contractions, which must split
-_PLAIN_SENTENCE = re.compile(r"^[a-z0-9]+( [a-z0-9]+)*$")
+# (fullmatch: "$" would also pass a trailing "\n" into the last token)
+_PLAIN_SENTENCE = re.compile(r"[a-z0-9]+( [a-z0-9]+)*")
 _PLAIN_CONTRACTIONS = frozenset(
     ["cannot", "gimme", "gonna", "gotta", "lemme", "wanna"])
 
 
 def _plain_tokens(text: str):
     """Fast-path token list, or None if any rule could fire."""
-    if not _PLAIN_SENTENCE.match(text):
+    if not _PLAIN_SENTENCE.fullmatch(text):
         return None
     tokens = text.split(" ")
     if _PLAIN_CONTRACTIONS.isdisjoint(tokens):
@@ -106,26 +141,20 @@ def treebank_tokenize(text: str) -> list[str]:
     fast = _plain_tokens(text)
     if fast is not None:
         return fast
-    for regexp, substitution in _STARTING_QUOTES:
-        text = regexp.sub(substitution, text)
-
-    for regexp, substitution in _PUNCTUATION:
-        text = regexp.sub(substitution, text)
-
-    regexp, substitution = _PARENS_BRACKETS
-    text = regexp.sub(substitution, text)
-    regexp, substitution = _DOUBLE_DASHES
-    text = regexp.sub(substitution, text)
+    text = _apply_rules(_STARTING_QUOTES, text)
+    text = _apply_rules(_PUNCTUATION, text)
+    text = _apply_rules(_PARENS_BRACKETS, text)
+    text = _apply_rules(_DOUBLE_DASHES, text)
 
     text = " " + text + " "
 
-    for regexp, substitution in _ENDING_QUOTES:
-        text = regexp.sub(substitution, text)
+    text = _apply_rules(_ENDING_QUOTES, text)
 
-    for regexp in _CONTRACTIONS2:
-        text = regexp.sub(r" \1 \2 ", text)
-    for regexp in _CONTRACTIONS3:
-        text = regexp.sub(r" \1 \2 ", text)
+    if _may_contract(text, _PLAIN_CONTRACTIONS):
+        for regexp in _CONTRACTIONS2:
+            text = regexp.sub(r" \1 \2 ", text)
+        for regexp in _CONTRACTIONS3:
+            text = regexp.sub(r" \1 \2 ", text)
 
     return text.split()
 
@@ -155,31 +184,33 @@ def word_tokenize(text: str) -> list[str]:
 # Treebank detokenizer (used by remove_duplicate_tokens)
 # ---------------------------------------------------------------------------
 
+# (regexp, substitution, triggers), as for the tokenizer tables
 _DETOK_ENDING_QUOTES = [
-    (re.compile(r"([^' ])\s('ll|'LL|'re|'RE|'ve|'VE|n't|N'T) "), r"\1\2 "),
-    (re.compile(r"([^' ])\s('[sS]|'[mM]|'[dD]|') "), r"\1\2 "),
-    (re.compile(r"(\S)\s(\'\')"), r"\1\2"),
-    (re.compile(r"(\'\')\s([.,:)\]>};%])"), r"\1\2"),
-    (re.compile(r"''"), '"'),
+    (re.compile(r"([^' ])\s('ll|'LL|'re|'RE|'ve|'VE|n't|N'T) "), r"\1\2 ",
+     ("'",)),
+    (re.compile(r"([^' ])\s('[sS]|'[mM]|'[dD]|') "), r"\1\2 ", ("'",)),
+    (re.compile(r"(\S)\s(\'\')"), r"\1\2", ("''",)),
+    (re.compile(r"(\'\')\s([.,:)\]>};%])"), r"\1\2", ("''",)),
+    (re.compile(r"''"), '"', ("''",)),
 ]
-_DETOK_DOUBLE_DASHES = (re.compile(r" -- "), r"--")
+_DETOK_DOUBLE_DASHES = [(re.compile(r" -- "), r"--", (" -- ",))]
 _DETOK_PARENS_BRACKETS = [
-    (re.compile(r"([\[\(\{\<])\s"), r"\g<1>"),
-    (re.compile(r"\s([\]\)\}\>])"), r"\g<1>"),
-    (re.compile(r"([\]\)\}\>])\s([:;,.])"), r"\1\2"),
+    (re.compile(r"([\[\(\{\<])\s"), r"\g<1>", ("(", "[", "{", "<")),
+    (re.compile(r"\s([\]\)\}\>])"), r"\g<1>", (")", "]", "}", ">")),
+    (re.compile(r"([\]\)\}\>])\s([:;,.])"), r"\1\2", (")", "]", "}", ">")),
 ]
 _DETOK_PUNCTUATION = [
-    (re.compile(r"([^'])\s'\s"), r"\1' "),
-    (re.compile(r"\s([?!])"), r"\g<1>"),
-    (re.compile(r'([^\.])\s(\.)([\]\)}>"\']*)\s*$'), r"\1\2\3"),
-    (re.compile(r"([#$])\s"), r"\g<1>"),
-    (re.compile(r"\s([;%])"), r"\g<1>"),
-    (re.compile(r"\s([:,])"), r"\1"),
+    (re.compile(r"([^'])\s'\s"), r"\1' ", ("'",)),
+    (re.compile(r"\s([?!])"), r"\g<1>", ("?", "!")),
+    (re.compile(r'([^\.])\s(\.)([\]\)}>"\']*)\s*$'), r"\1\2\3", (".",)),
+    (re.compile(r"([#$])\s"), r"\g<1>", ("#", "$")),
+    (re.compile(r"\s([;%])"), r"\g<1>", (";", "%")),
+    (re.compile(r"\s([:,])"), r"\1", (":", ",")),
 ]
 _DETOK_STARTING_QUOTES = [
-    (re.compile(r"([ (\[{<])\s``"), r"\1``"),
-    (re.compile(r"(``)\s"), r"\1"),
-    (re.compile(r"``"), r'"'),
+    (re.compile(r"([ (\[{<])\s``"), r"\1``", ("``",)),
+    (re.compile(r"(``)\s"), r"\1", ("``",)),
+    (re.compile(r"``"), r'"', ("``",)),
 ]
 
 
@@ -211,23 +242,15 @@ import functools as _functools
 def _detokenize_slow(text: str) -> str:
     # pure function of the joined text: cache it — a sample's tokens
     # are detokenized twice (plain + sci-name variants, usually equal)
-    for regexp in _DETOK_CONTRACTIONS:
-        text = regexp.sub(r"\1\2", text)
+    if _may_contract(text, _CONTRACTION_HEADS):
+        for regexp in _DETOK_CONTRACTIONS:
+            text = regexp.sub(r"\1\2", text)
 
-    for regexp, substitution in _DETOK_ENDING_QUOTES:
-        text = regexp.sub(substitution, text)
-
-    regexp, substitution = _DETOK_DOUBLE_DASHES
-    text = regexp.sub(substitution, text)
-
-    for regexp, substitution in _DETOK_PARENS_BRACKETS:
-        text = regexp.sub(substitution, text)
-
-    for regexp, substitution in _DETOK_PUNCTUATION:
-        text = regexp.sub(substitution, text)
-
-    for regexp, substitution in _DETOK_STARTING_QUOTES:
-        text = regexp.sub(substitution, text)
+    text = _apply_rules(_DETOK_ENDING_QUOTES, text)
+    text = _apply_rules(_DETOK_DOUBLE_DASHES, text)
+    text = _apply_rules(_DETOK_PARENS_BRACKETS, text)
+    text = _apply_rules(_DETOK_PUNCTUATION, text)
+    text = _apply_rules(_DETOK_STARTING_QUOTES, text)
 
     return text.strip()
 

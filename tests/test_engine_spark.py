@@ -1039,3 +1039,32 @@ def test_session_parallelism_conf_error_propagates():
 
     with pytest.raises(RuntimeError, match="conf unavailable"):
         engine._session_parallelism(_stub_session(broken_get))
+
+
+def test_manifest_frame_is_a_local_scan(spark):
+    """The manifest rows reach the writer without Python tasks or a
+    shuffle: the plan is a local table scan with no Exchange, and a
+    NULL and an int ``wide_fpb`` both round-trip, one file per
+    manifest/bucket=<b>."""
+    import pyarrow.parquet as pq
+
+    fp = (engine.MANIFEST_VERSION, "run_full_artifacts", 2, True, False,
+          False)
+    rows = [(3, 7, *fp, None, "sha", 0), (0, 0, *fp, 4, "sha", 1)]
+    frame = engine._manifest_frame(spark, rows)
+    plan = frame._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan and "LocalTableScan" in plan, plan
+    out = tempfile.mkdtemp()
+    try:
+        engine._write_buckets(frame).parquet(out)
+        got = sorted((tuple(r) for r in spark.read.parquet(out).collect()),
+                     key=lambda r: r[-1])
+        assert [(r[-1], r[-3]) for r in got] == [(0, None), (1, 4)]
+        assert got == [tuple(r) for r in rows]
+        for b in (0, 1):
+            bdir = os.path.join(out, f"bucket={b}")
+            files = [f for f in os.listdir(bdir) if f.endswith(".parquet")]
+            assert len(files) == 1, files
+            assert pq.read_table(os.path.join(bdir, files[0])).num_rows == 1
+    finally:
+        shutil.rmtree(out, ignore_errors=True)

@@ -54,7 +54,7 @@ def main(sf_dir="/root/testdata/sf0.01", only=None):
     import __spark_entry__ as entrymod
     from lexmapr_spark.engine import build_spark
 
-    spark = build_spark(cpus=16, shuffle_partitions=16)
+    spark = build_spark()
     con = duckdb.connect()
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM "
